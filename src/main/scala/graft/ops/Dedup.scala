@@ -57,22 +57,26 @@ object Dedup {
     docs.groupBy(md5(col("text")).as("text_md5"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct 3-token shingles per document (see TextOps.shingleSet for the
-    * codegen/partitioning rationale).
+  /** Distinct 3-token shingles per document (see
+    * TextOps.shingleOccurrences for the codegen/partitioning rationale).
     */
   def shingles(docs: DataFrame): DataFrame = TextOps.shingleSet(docs)
 
   /** MinHash signatures: one row per doc, columns mh0..mh{k-1}.
-    * Single shuffle: groupBy(doc_id) with k min-aggregates over the k affine
-    * permutations of ONE base hash. The base hash is materialized in a child
+    * groupBy(doc_id) with k min-aggregates over the k affine permutations
+    * of ONE base hash. The base hash is materialized in a child
     * projection — aggregate expressions referencing an inline hash would
     * re-evaluate the md5 chain once per aggregate per row (no CSE across
-    * aggregate expressions).
+    * aggregate expressions). A min ignores repeated shingles, so the
+    * aggregate reads the shingle occurrences, not the distinct set: it
+    * combines map-side in the scan's pipeline and shuffles one partial
+    * row per doc and task, with no distinct before it.
     */
   def minhashSignatures(
       docs: DataFrame,
       hash: (String, Column) => Column = PortableHash.h31): DataFrame = {
-    val hashed = shingles(docs).select(col("doc_id"), hash("mh", col("shingle")).as("h"))
+    val hashed = TextOps.shingleOccurrences(docs)
+      .select(col("doc_id"), hash("mh", col("shingle")).as("h"))
     val aggs = minhashSeeds.zipWithIndex.map { case ((a, b), i) =>
       min((col("h") * a + b) % P31).as(s"mh$i")
     }

@@ -26,28 +26,31 @@ object TextOps {
 
   /** Distinct 3-token shingles per document — the set representation used
     * by MinHash/SimHash/Jaccard fingerprinting.
-    *
-    * Built from fully codegen'd primitives: split → posexplode → window
-    * `lead` → concat_ws → distinct. The obvious alternative
-    * (`transform(sequence(...), i -> concat_ws(element_at...))`) is a
-    * higher-order lambda = CodegenFallback: interpreted per-element eval,
-    * measured ~10× slower, and it runs entirely in the file-scan task. The
-    * window's hash-exchange on doc_id ALSO re-partitions the exploded
-    * tokens, so every downstream shingle consumer is parallel even when the
-    * source is one parquet file — at 100 TB, partitioning must be sized to
-    * post-explode volume, not input file count.
     */
-  def shingleSet(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs.select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-      .select(col("doc_id"), col("pos"), col("tok"),
-        lead(col("tok"), 1).over(w).as("tok1"),
-        lead(col("tok"), 2).over(w).as("tok2"))
+  def shingleSet(docs: DataFrame): DataFrame = shingleOccurrences(docs).distinct()
+
+  /** Every 3-token shingle occurrence (doc_id, shingle), repeats kept —
+    * `shingleSet` before its distinct, for consumers whose aggregate
+    * ignores repeats (a min).
+    *
+    * Built from fully codegen'd primitives: split → posexplode → the next
+    * two tokens read from the same token array by position → concat_ws,
+    * all inside the scan's pipeline, with no shuffle and no sort of its
+    * own. The obvious alternative (`transform(sequence(...), i ->
+    * concat_ws(element_at...))`) is a higher-order lambda =
+    * CodegenFallback: interpreted per-element eval, measured ~10× slower.
+    * A per-doc consumer aggregates map-side first, so only its partial
+    * results are shuffled on doc_id — at 100 TB, the downstream
+    * parallelism is set by that exchange, not by the input file count.
+    */
+  private[graft] def shingleOccurrences(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "tok")))
+      .select(col("doc_id"), col("tok"),
+        get(col("toks"), col("pos") + 1).as("tok1"),
+        get(col("toks"), col("pos") + 2).as("tok2"))
       .filter(col("tok2").isNotNull)
       .select(col("doc_id"), concat_ws(" ", col("tok"), col("tok1"), col("tok2")).as("shingle"))
-      .distinct()
-  }
 
   /** Per-document token statistics: count, distinct count, type-token ratio. */
   def tokenStats(docs: DataFrame): DataFrame = {
@@ -1209,12 +1212,12 @@ object TextOps {
   /** BM25 top-k lexical retrieval over the corpus for the fixed query
     * set — the inverted-index posting join expressed relationally: the
     * token table filtered to query terms (tf), term document frequencies
-    * (|terms| rows, broadcast), document lengths, and the one-row
-    * (n_docs, sum_dl) corpus stats broadcast-crossed on. Scale shape:
-    * the posting table shuffles once on (doc, term); df/qterm/stats sides
-    * are all broadcast; the final per-query ranking window partitions by
-    * query. avgdl derives from INTEGER sums (sum_dl/n_docs), never a
-    * double avg() crossing the engine boundary.
+    * and the (n_docs, sum_dl) corpus stats (|terms| rows, broadcast), and
+    * document lengths. Scale shape: the posting table shuffles once on
+    * (query, doc); the stats side and the query terms are broadcast; the
+    * final per-query ranking window partitions by query. avgdl derives
+    * from INTEGER sums (sum_dl/n_docs), never a double avg() crossing the
+    * engine boundary.
     */
   def bm25TopK(
       docs: DataFrame,
@@ -1225,7 +1228,7 @@ object TextOps {
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val dl = docs.select(col("doc_id"), size(tokens(col("text"))).cast("long").as("dl"))
-    bm25Score(tf, dl, queries, k)
+    lexicalTopK(tf, dl, queries, k, Bm25Ranker)
   }
 
   /** BM25 ranking from an inverted-index pair of tables — postings
@@ -1243,38 +1246,92 @@ object TextOps {
       queries: Seq[(Int, Seq[String])] = Bm25Queries,
       k: Int = 10): DataFrame = {
     val terms = queries.flatMap(_._2).distinct
-    bm25Score(postings.filter(col("tok").isin(terms: _*))
+    lexicalTopK(postings.filter(col("tok").isin(terms: _*))
         .select(col("doc_id"), col("tok"), col("tf")),
-      doclens.select(col("doc_id"), col("dl")), queries, k)
+      doclens.select(col("doc_id"), col("dl")), queries, k, Bm25Ranker)
   }
 
-  /** The shared BM25 scoring plan over query-term postings + doc lengths:
-    * broadcast query terms and df table, posting ⋈ doclen join, the
-    * per-(term, doc) contribution expression shared verbatim with the
-    * oracle SQL, per-query top-k window.
+  /** Which score `lexicalTopK` ranks by. */
+  private val Bm25Ranker = 0
+  private val QlRanker = 1
+
+  /** The ONE scoring plan of both lexical rankers over query-term
+    * postings (doc_id, tok, tf) + doc lengths: the postings meet the
+    * query terms and the doc lengths (both broadcast-sized here; the
+    * doc-length join shuffles on doc_id at scale), and the candidates —
+    * the (query, doc) pairs with at least one query term — gather the tf
+    * of every query-term slot (null when the doc lacks the term). The
+    * slots fan back out to one row per query term, which meets the
+    * broadcast per-term and corpus statistics and scores with BM25's
+    * term expression (shared verbatim with the oracle SQL; null, so
+    * summed as nothing, for an absent term) or Dirichlet QL's (absent
+    * terms add their smoothing mass). The score sum reuses the
+    * candidates' partitioning; per-query top-k window.
+    *
+    * `ranker` and `k` reach the plan only as data of the query-term rows,
+    * never as literals in it, so BM25 and QL run the same plan and reuse
+    * each other's generated code.
     */
-  private def bm25Score(
+  private def lexicalTopK(
       tf: DataFrame,
       dl: DataFrame,
       queries: Seq[(Int, Seq[String])],
-      k: Int): DataFrame = {
+      k: Int,
+      ranker: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = tf.sparkSession
     import spark.implicits._
-    val qterms = queries.flatMap { case (q, ts) => ts.map(q -> _) }.toDF("q_id", "qtok")
-    val dft = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val scored = tf
-      .join(broadcast(qterms), col("tok") === col("qtok"))
-      .join(broadcast(dft), Seq("tok"))
+    val byQuery = queries.groupBy(_._1).map { case (q, qs) => q -> qs.flatMap(_._2) }
+    val termsOfQuery = typedLit(byQuery)
+    val maxTerms = byQuery.values.map(_.size).max
+    // one row per query-term occurrence, numbered by its slot in the query
+    val qterms = byQuery.toSeq.flatMap { case (q, ts) =>
+      ts.zipWithIndex.map { case (t, i) => (q, t, i, ranker, k) }
+    }.toDF("q_id", "tok", "slot", "ranker", "k")
+    val cand = tf
+      .join(broadcast(qterms), Seq("tok"))
       .join(dl, Seq("doc_id"))
-      .join(broadcast(stats))
-      .select(col("q_id"), col("doc_id"), expr(bm25TermSql).as("s"))
-      .groupBy(col("q_id"), col("doc_id"))
+      .groupBy(col("q_id"), col("doc_id"), col("k"))
+      .agg(max(col("ranker")).as("ranker"), max(col("dl")).as("dl"),
+        array((0 until maxTerms).map(i => max(when(col("slot") === i, col("tf")))): _*).as("slot_tf"))
+    val qlTerm = log(
+      (coalesce(col("tf"), lit(0L)).cast("double") +
+        lit(QlMu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
+        (col("dl").cast("double") + lit(QlMu)))
+    val scored = cand
+      .select(col("q_id"), col("doc_id"), col("k"), col("ranker"), col("dl"), col("slot_tf"),
+        posexplode(element_at(termsOfQuery, col("q_id"))).as(Seq("i", "tok")))
+      .select(col("q_id"), col("doc_id"), col("k"), col("ranker"), col("dl"), col("tok"),
+        element_at(col("slot_tf"), col("i") + 1).as("tf"))
+      .join(broadcast(termStats(tf, dl, queries.flatMap(_._2).distinct)), Seq("tok"))
+      .select(col("q_id"), col("doc_id"), col("k"),
+        when(col("ranker") === Bm25Ranker, expr(bm25TermSql)).otherwise(qlTerm).as("s"))
+      .groupBy(col("q_id"), col("doc_id"), col("k"))
       .agg(round(sum(col("s")), 6).as("score"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= col("k"))
       .select(col("q_id"), col("rank"), col("doc_id"), col("score"))
+  }
+
+  /** Per query term: document frequency (postings count), collection
+    * frequency (Σ tf), and the corpus statistics n_docs and sum_dl (the
+    * same on every row; integer sums, so avgdl derives exactly). ONE
+    * aggregate over the term postings ∪ the doc lengths fanned out to
+    * every query term: a single broadcast table carries all the
+    * statistics both rankers read, with no one-row cross and no second
+    * aggregation whose completion order could renumber the stages after
+    * it. The fan-out is |terms| hash-aggregate updates per doc length,
+    * combined map-side; terms with no postings drop out (df > 0).
+    */
+  private def termStats(tf: DataFrame, dl: DataFrame, terms: Seq[String]): DataFrame = {
+    val none = lit(null).cast("long")
+    tf.select(col("tok"), lit(1L).as("d"), col("tf").as("c"), none.as("n"), none.as("l"))
+      .unionByName(dl.select(explode(typedLit(terms)).as("tok"),
+        none.as("d"), none.as("c"), lit(1L).as("n"), col("dl").as("l")))
+      .groupBy(col("tok"))
+      .agg(sum(col("d")).as("df"), sum(col("c")).as("cf"),
+        sum(col("n")).as("n_docs"), sum(col("l")).as("sum_dl"))
+      .filter(col("df") > 0)
   }
 
   /** Heaps'-law vocabulary-growth fit V = K·N^β across sources: per-source
@@ -1326,13 +1383,14 @@ object TextOps {
     * probabilistic LM ranker that pairs with BM25 in every fusion
     * baseline. Scored over the candidate pool (docs matching ≥1 query
     * term); a query term with tf=0 still contributes its smoothing-only
-    * mass via the LEFT join, which is what makes two-term docs comparable
-    * to one-term docs. All inputs are integers; the 2-3-term sum rounds
-    * 6dp before ranking (the cross-engine ln-ulp convention).
+    * mass (its candidate slot is empty), which is what makes two-term
+    * docs comparable to one-term docs. All inputs are integers; the
+    * 2-3-term sum rounds 6dp before ranking (the cross-engine ln-ulp
+    * convention).
     *
-    * Scale: same posting-join shape as bm25TopK — tf/cf sides filtered to
-    * the query vocabulary (broadcast-sized), the one-row corpus stats a
-    * labeled broadcast cross, per-query ranking window.
+    * Scale: the same plan as bm25TopK (`lexicalTopK`) — tf/cf sides
+    * filtered to the query vocabulary (broadcast-sized), per-query
+    * ranking window.
     */
   def qlTopK(
       docs: DataFrame,
@@ -1343,7 +1401,7 @@ object TextOps {
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val dl = docs.select(col("doc_id"), size(tokens(col("text"))).cast("long").as("dl"))
-    qlScore(tf, dl, queries, k)
+    lexicalTopK(tf, dl, queries, k, QlRanker)
   }
 
   /** Dirichlet-QL from the inverted-index tables (see bm25TopKFromIndex):
@@ -1356,40 +1414,9 @@ object TextOps {
       queries: Seq[(Int, Seq[String])] = Bm25Queries,
       k: Int = RrfPoolK): DataFrame = {
     val terms = queries.flatMap(_._2).distinct
-    qlScore(postings.filter(col("tok").isin(terms: _*))
+    lexicalTopK(postings.filter(col("tok").isin(terms: _*))
         .select(col("doc_id"), col("tok"), col("tf")),
-      doclens.select(col("doc_id"), col("dl")), queries, k)
-  }
-
-  private def qlScore(
-      tf: DataFrame,
-      dl: DataFrame,
-      queries: Seq[(Int, Seq[String])],
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = tf.sparkSession
-    import spark.implicits._
-    val qterms = queries.flatMap { case (q, ts) => ts.map(q -> _) }.toDF("q_id", "qtok")
-    // collection frequency = Σ tf — identical to counting instances
-    val cf = tf.groupBy(col("tok").as("qtok")).agg(sum(col("tf")).as("cf"))
-    val st = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val cand = tf.join(broadcast(qterms), col("tok") === col("qtok"))
-      .select(col("q_id"), col("doc_id")).distinct()
-    val term = log(
-      (coalesce(col("tf"), lit(0L)).cast("double") +
-        lit(QlMu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
-        (col("dl").cast("double") + lit(QlMu)))
-    cand.join(broadcast(qterms), Seq("q_id"))
-      .join(tf.select(col("doc_id"), col("tok").as("qtok"), col("tf")), Seq("doc_id", "qtok"), "left")
-      .join(broadcast(cf), Seq("qtok"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(st))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(round(sum(term), 6).as("score"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("doc_id"), col("score"))
+      doclens.select(col("doc_id"), col("dl")), queries, k, QlRanker)
   }
 
   /** Content-addressable corpus manifest: per source, the document
@@ -1422,34 +1449,41 @@ object TextOps {
     1 -> "hash join", 2 -> "slow query", 3 -> "customer order merge")
 
   /** Exact phrase search over a positional index (doc_id, pos, tok):
-    * a phrase of n words matches where the n postings line up at
-    * consecutive positions in one document — the n-way self-equi-join on
-    * (doc_id, pos+i) that a positional inverted index exists to answer
-    * (substring LIKE cannot count overlapping/adjacent repeats and scans
-    * full text; the join reads only the phrase words' postings). Emits
-    * exact per-document occurrence counts.
+    * a phrase of n words matches where its n words line up at consecutive
+    * positions in one document. One scan reads the postings of every
+    * phrase word and fans each out to its (q_id, offset, n_words) slots;
+    * a start position `pos - offset` whose group fills all n slots is
+    * one occurrence (substring LIKE cannot count
+    * overlapping/adjacent repeats and scans full text). Emits exact
+    * per-document occurrence counts.
     *
-    * Scale: each arm of the join is the postings of ONE word (selective
-    * scans — bucketed by tok at 100 TB), all joins keyed on doc_id; the
-    * phrase length is a plan-time constant, so the join depth is fixed.
+    * Contract: each (doc_id, pos) appears at most once (see
+    * `StreamingTextIngest.readPositions`), so a slot is filled by at most
+    * one row and a repeated word fills each of its slots separately.
+    *
+    * Scale: one selective scan (bucketed by tok at 100 TB, so it reads
+    * only the phrase words' buckets), one shuffle keyed by (q_id, doc_id)
+    * that both aggregations reuse, whatever the phrase lengths.
     */
   def phraseSearch(
       positions: DataFrame,
       phrases: Seq[(Int, String)] = PhraseQueries): DataFrame = {
-    val matches = phrases.map { case (qid, phrase) =>
+    val slots = phrases.flatMap { case (qid, phrase) =>
       val words = phrase.split(" ").toSeq
-      val base = positions.filter(col("tok") === words.head)
-        .select(col("doc_id"), col("pos").as("p0"))
-      val lined = words.zipWithIndex.drop(1).foldLeft(base) { case (acc, (w, i)) =>
-        acc.join(positions.filter(col("tok") === w)
-            .select(col("doc_id"), (col("pos") - lit(i)).as("p0")),
-          Seq("doc_id", "p0"))
-      }
-      lined.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_matches"))
-        .select(lit(qid).as("q_id"), col("doc_id"), col("n_matches"))
+      words.zipWithIndex.map { case (w, i) => w -> (qid, i, words.size) }
     }
-    matches.reduce(_.unionByName(_))
+    // word → its (q_id, offset, n_words) slots: a constant of the plan
+    val slotsOfWord = typedLit(slots.groupBy(_._1).map { case (w, ss) => w -> ss.map(_._2) })
+    positions.filter(col("tok").isin(slots.map(_._1).distinct: _*))
+      .select(col("doc_id"), col("pos"), explode(element_at(slotsOfWord, col("tok"))).as("s"))
+      .select(col("s._1").as("q_id"), col("doc_id"), col("s._3").as("n_words"),
+        (col("pos") - col("s._2")).as("start"))
+      .repartition(col("q_id"), col("doc_id"))
+      .groupBy(col("q_id"), col("doc_id"), col("n_words"), col("start"))
+      .agg(count(lit(1)).as("filled"))
+      .filter(col("filled") === col("n_words"))
+      .groupBy(col("q_id"), col("doc_id"))
+      .agg(count(lit(1)).as("n_matches"))
   }
 
   /** The positional index of a docs frame — (doc_id, pos, tok), 1-based
@@ -1536,10 +1570,11 @@ object TextOps {
     */
   /** `index` = the maintained (postings, doclens) tables (round 14): when
     * present, all three rankers run their FromIndex twins and the qrels
-    * doc-term table reads the postings' (doc_id, tok) pairs — distinct by
-    * construction of the tf groupBy, so row-identical to the inline
-    * explode+distinct — and the report runs ZERO corpus scans. Results
-    * are bit-identical either way (same oracle).
+    * doc-term table reads the postings' distinct (doc_id, tok) pairs —
+    * row-identical to the inline explode+distinct even when a doc's
+    * postings were written by more than one batch — and the report runs
+    * ZERO corpus scans. Results are bit-identical either way (same
+    * oracle).
     */
   def retrievalNdcgReport(
       docs: DataFrame,
@@ -1562,7 +1597,7 @@ object TextOps {
         log2(rank.cast("double") + lit(1.0)), 0).cast("long")
 
     val dt = index match {
-      case Some((p, _)) => p.select(col("doc_id"), col("tok"))
+      case Some((p, _)) => p.select(col("doc_id"), col("tok")).distinct()
       case None =>
         docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok")).distinct()
     }

@@ -103,10 +103,10 @@ object QuantizerRefresh {
     val idx = StreamingAnnIngest.readIndex(spark, versionDir(root, newQv))
     val stats = idx.agg(
       count(lit(1)).as("n_rows"), countDistinct(col("cell")).as("n_cells")).head()
-    val row = Row(stats.getLong(0), stats.getLong(1), newQv)
     spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(row), 1), commitSchema)
-      .overwritePartitions(commitsDir(root), QvCol)
+        spark.sparkContext.parallelize(Seq(Row(stats.getLong(0), stats.getLong(1))), 1),
+        StructType(commitSchema.filterNot(_.name == QvCol)))
+      .overwritePartition(commitsDir(root), QvCol, newQv)
   }
 
   /** File-count COMPACTION as a same-quantizer cutover: rebuild the

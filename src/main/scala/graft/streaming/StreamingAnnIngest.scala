@@ -140,8 +140,7 @@ object StreamingAnnIngest {
     */
   def appendDeletes(tombs: DataFrame, batchId: Long, indexDir: String): Unit =
     tombs.select(col("vec_id")).distinct()
-      .withColumn(BatchCol, lit(batchId))
-      .overwritePartitions(s"$indexDir/$DeletesSub", BatchCol)
+      .overwritePartition(s"$indexDir/$DeletesSub", BatchCol, batchId)
 
   /** The accumulated delete vector (empty before any logical delete),
     * one row per tombstoned vec_id. `del_batch` = the LATEST batch whose

@@ -71,8 +71,7 @@ object StreamingBloom {
     merged
       .select(col("word_idx").cast("long").as("word_idx"),
         col("bits").cast("long").as("bits"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

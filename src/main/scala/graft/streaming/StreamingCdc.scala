@@ -15,7 +15,7 @@ import graft.streaming.StreamingWrites.GuardedWrites
   *
   * Sink layout: VERSIONED SNAPSHOTS, hive-partitioned by `graft_version` =
   * the micro-batch id (the same idea as a table format's snapshot log,
-  * built from plain parquet + dynamic partition overwrite). Each batch
+  * built from plain parquet + a per-version partition write). Each batch
   * reads the latest PRIOR version, folds the batch with Cdc.applyChanges,
   * and overwrites ITS OWN version partition.
   *
@@ -23,7 +23,7 @@ import graft.streaming.StreamingWrites.GuardedWrites
   * argument as StreamingDedup: the prior-snapshot read EXCLUDES the current
   * batch's version (a retry cannot see its own half-written output), and
   * Structured Streaming pins batch contents in the checkpoint, so the
-  * recomputed snapshot is identical and the dynamic overwrite of
+  * recomputed snapshot is identical and the overwrite of
   * version=batchId replaces the first attempt. Readers pick the max
   * committed version — never a torn one, because a version becomes visible
   * only at commit.
@@ -108,8 +108,7 @@ object StreamingCdc {
     val snapSchema = StructType(batch.schema.filterNot(_.name == deleteCol))
     val prev = latestSnapshot(spark, snapshotDir, snapSchema, batchId)
     Cdc.applyChanges(prev, batch, keyCols, versionCols, deleteCol)
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(snapshotDir, VersionCol)
+      .overwritePartition(snapshotDir, VersionCol, batchId)
   }
 
   def start(

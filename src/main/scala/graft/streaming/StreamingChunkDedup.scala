@@ -28,8 +28,8 @@ import graft.streaming.StreamingWrites.GuardedWrites
   * Delivery: EXACTLY-ONCE across crash retries by the family mechanism —
   * chunking + signatures are deterministic projections of the batch,
   * Structured Streaming pins batch contents in the checkpoint, and
-  * dynamic partition overwrite keyed by batch_id makes a replayed batch
-  * REPLACE its own first attempt.
+  * overwriting its own batch_id partition makes a replayed batch REPLACE
+  * its own first attempt.
   *
   * Scale: per batch one chunk explode + one signature groupBy over THIS
   * batch only; the accumulated index holds one 12-long row per chunk
@@ -87,8 +87,7 @@ object StreamingChunkDedup {
   def processBatch(batch: DataFrame, batchId: Long, indexDir: String): Unit = {
     val chunks = chunkPseudoDocs(batch)
     Dedup.minhashSignatures(chunks)
-      .withColumn(BatchCol, lit(batchId))
-      .overwritePartitions(indexDir, BatchCol)
+      .overwritePartition(indexDir, BatchCol, batchId)
   }
 
   /** TOMBSTONE propagation: remove EVERY chunk signature of the given

@@ -71,8 +71,7 @@ object StreamingCms {
       .select(col("row_idx").cast("int").as("row_idx"),
         col("col_idx").cast("long").as("col_idx"),
         col("cnt").cast("long").as("cnt"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

@@ -79,8 +79,7 @@ object StreamingComponents {
     val untouched = prior.join(touchedReps, Seq("rep"), "left_anti")
       .select(col("doc_id"), col("rep"))
     untouched.unionByName(rebuilt.select(col("doc_id"), col("rep")))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

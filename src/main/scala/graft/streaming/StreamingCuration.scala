@@ -22,10 +22,10 @@ import graft.streaming.StreamingWrites.GuardedWrites
   *
   * Delivery: EXACTLY-ONCE across JVM-crash retries by the same mechanism
   * as StreamingDedup — both sinks are hive-partitioned by `batch_id` and
-  * written with dynamic partition overwrite, so a replayed batch replaces
-  * its own first attempt (Structured Streaming pins batch contents in the
-  * checkpoint offset log, so the recomputation is identical and the
-  * overwrite is a no-op rename).
+  * written partition by partition (`overwritePartition`), so a replayed
+  * batch replaces its own first attempt (Structured Streaming pins batch
+  * contents in the checkpoint offset log, so the recomputation is
+  * identical and the overwrite is a no-op rename).
   */
 object StreamingCuration {
 
@@ -57,12 +57,10 @@ object StreamingCuration {
       report.filter(col("retained"))
         .select(col("doc_id"), col("n_tokens"), col("quality_score"), col("had_pii"))
         .join(scrubbed, Seq("doc_id"))
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(keptDir, BatchCol)
+        .overwritePartition(keptDir, BatchCol, batchId)
       report.filter(not(col("retained")))
         .select(col("doc_id"), col("reject_reason"))
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(rejectsDir, BatchCol)
+        .overwritePartition(rejectsDir, BatchCol, batchId)
       obs.get
     } finally report.unpersist()
   }

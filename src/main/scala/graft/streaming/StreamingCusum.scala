@@ -132,8 +132,7 @@ object StreamingCusum {
     val untouched = prior.join(batch.select(col("user_id")).distinct(),
       Seq("user_id"), "left_anti")
     untouched.unionByName(perUser)
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

@@ -73,8 +73,7 @@ object StreamingDailyActive {
       .agg(sum(col("c")).as("c"))
       .select(col("d").cast("long").as("d"), col("user_id"),
         col("c").cast("long").as("c"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

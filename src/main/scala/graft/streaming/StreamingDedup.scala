@@ -82,11 +82,9 @@ object StreamingDedup {
     // batch, release before the next (no cross-batch cache leak)
     survivors.persist()
     try {
-      survivors.withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(corpusDir, BatchCol)
+      survivors.overwritePartition(corpusDir, BatchCol, batchId)
       Dedup.minhashBands(Dedup.minhashSignatures(survivors))
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(historyDir, BatchCol)
+        .overwritePartition(historyDir, BatchCol, batchId)
     } finally survivors.unpersist()
   }
 

@@ -45,8 +45,8 @@ import graft.streaming.StreamingWrites.GuardedWrites
   * every derived table is deterministic in (batch contents, prior
   * committed state), Structured Streaming pins batch contents in the
   * checkpoint, reads exclude the current batch's own partition/version,
-  * and dynamic partition overwrite keyed by batch_id / version makes a
-  * replayed batch REPLACE its own first attempt (replay spec-pinned).
+  * and every write overwrites its own batch_id / version partition, so a
+  * replayed batch REPLACES its own first attempt (replay spec-pinned).
   */
 object StreamingDedupIndex {
 
@@ -149,79 +149,74 @@ object StreamingDedupIndex {
     * the copy-on-write scrub.
     */
   def processBatchCore(batch: DataFrame, batchId: Long, indexDir: String): Unit = {
-    val spark = batch.sparkSession
-    val newSig = Dedup.minhashSignatures(batch).persist()
-    try {
-      newSig.withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/signatures", BatchCol)
-      val history = readSignatures(spark, indexDir, batchId)
-      Dedup.minhashLshPairsIncremental(newSig, history.unionByName(newSig))
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/pairs", BatchCol)
-    } finally newSig.unpersist()
+    Dedup.minhashSignatures(batch).overwritePartition(s"$indexDir/signatures", BatchCol, batchId)
+    probeBatch(batch.sparkSession, indexDir, batchId)
+      .overwritePartition(s"$indexDir/pairs", BatchCol, batchId)
+  }
+
+  /** This batch's new candidate pairs: its signatures, read back from
+    * the partition just written, probed against the signature index
+    * through this batch. The read stops at `batchId`, so a retry probes
+    * the index its first attempt saw (its own partition rewritten
+    * identically). Both sides are partition-pruned scans of one table:
+    * no cached frame, no union, and the same plan every batch.
+    */
+  private def probeBatch(spark: SparkSession, indexDir: String, batchId: Long): DataFrame = {
+    val sigs = readOr(spark, s"$indexDir/signatures", sigSchema)
+      .filter(col(BatchCol) <= batchId)
+    Dedup.minhashLshPairsIncremental(
+      sigs.filter(col(BatchCol) === batchId).drop(BatchCol), sigs.drop(BatchCol))
   }
 
   def processBatch(batch: DataFrame, batchId: Long, indexDir: String): Unit = {
     val spark = batch.sparkSession
-    // 1. signatures: computed once, used by the write AND the probe
-    val newSig = Dedup.minhashSignatures(batch).persist()
+    // every guarded write below also drops the shared file-status cache
+    // entries for its directory (StreamingWrites), so a retry's reads see
+    // the rewrite instead of the first attempt's vanished files
+    // 1. signatures of the batch
+    Dedup.minhashSignatures(batch).overwritePartition(s"$indexDir/signatures", BatchCol, batchId)
+    // 2. pairs: batch bands vs the signature index through this batch
+    val newPairs = probeBatch(spark, indexDir, batchId).persist()
     try {
-      // every guarded write below also drops the shared file-status cache
-      // entries for its directory (StreamingWrites), so a retry's reads see
-      // the rewrite instead of the first attempt's vanished files
-      newSig.withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/signatures", BatchCol)
-      // 2. pairs: batch bands vs history ∪ batch (history read EXCLUDES
-      // this batch's own partition so a retry probes the same index its
-      // first attempt saw)
-      val history = readSignatures(spark, indexDir, batchId)
-      val newPairs = Dedup
-        .minhashLshPairsIncremental(newSig, history.unionByName(newSig))
+      newPairs.overwritePartition(s"$indexDir/pairs", BatchCol, batchId)
+      // 3. components: the star-certificate incremental fold
+      StreamingComponents.processBatch(
+        newPairs, batchId, s"$indexDir/components")
+      // 4. labels: recompute LPA over the touched components only.
+      // Touched = components (POST-fold, so merges are already joint)
+      // containing any endpoint of this batch's new pairs.
+      val comps = StreamingComponents.readComponents(
+        spark, s"$indexDir/components", batchId + 1)
+      val priorLabels = readLabels(spark, indexDir, batchId)
+      val batchNodes = newPairs.select(col("doc_a").as("doc_id"))
+        .unionByName(newPairs.select(col("doc_b").as("doc_id"))).distinct()
+      val touchedReps = comps.join(batchNodes, Seq("doc_id"), "left_semi")
+        .select(col("rep")).distinct()
+      val members = comps.join(touchedReps, Seq("rep"), "left_semi")
+        .select(col("doc_id"))
+      // every pair is intra-component, so filtering on doc_a alone
+      // selects exactly the touched components' edge sets (persisted:
+      // both the LPA and bounded-hop recomputes read this slice)
+      val subPairs = readPairs(spark, indexDir, batchId)
+        .join(members.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
         .persist()
       try {
-        newPairs.withColumn(BatchCol, lit(batchId))
-          .overwritePartitions(s"$indexDir/pairs", BatchCol)
-        // 3. components: the star-certificate incremental fold
-        StreamingComponents.processBatch(
-          newPairs, batchId, s"$indexDir/components")
-        // 4. labels: recompute LPA over the touched components only.
-        // Touched = components (POST-fold, so merges are already joint)
-        // containing any endpoint of this batch's new pairs.
-        val comps = StreamingComponents.readComponents(
-          spark, s"$indexDir/components", batchId + 1)
-        val priorLabels = readLabels(spark, indexDir, batchId)
-        val batchNodes = newPairs.select(col("doc_a").as("doc_id"))
-          .unionByName(newPairs.select(col("doc_b").as("doc_id"))).distinct()
-        val touchedReps = comps.join(batchNodes, Seq("doc_id"), "left_semi")
-          .select(col("rep")).distinct()
-        val members = comps.join(touchedReps, Seq("rep"), "left_semi")
-          .select(col("doc_id"))
-        // every pair is intra-component, so filtering on doc_a alone
-        // selects exactly the touched components' edge sets (persisted:
-        // both the LPA and bounded-hop recomputes read this slice)
-        val subPairs = readPairs(spark, indexDir, batchId)
-          .join(members.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
-          .persist()
-        try {
-          val recomputed = Graph.labelPropagationWeightedEager(
-            subPairs.withColumnRenamed("est_jaccard", "weight"))
-          val untouched = priorLabels
-            .join(members.withColumnRenamed("doc_id", "node"), Seq("node"), "left_anti")
-          untouched.unionByName(recomputed)
-            .withColumn(VersionCol, lit(batchId))
-            .overwritePartitions(s"$indexDir/labels", VersionCol)
-          // 5. bounded-hop components: same touched-component recompute —
-          // the 3-iteration labels of a node depend only on its own
-          // component's edges, so recompute-over-touched + splice is
-          // EXACTLY the batch nearDupComponents over the full graph
-          val priorC3 = readComponents3(spark, indexDir, batchId)
-          priorC3.join(members, Seq("doc_id"), "left_anti")
-            .unionByName(Dedup.nearDupComponents(subPairs))
-            .withColumn(VersionCol, lit(batchId))
-            .overwritePartitions(s"$indexDir/components3", VersionCol)
-        } finally subPairs.unpersist()
-      } finally newPairs.unpersist()
-    } finally newSig.unpersist()
+        val recomputed = Graph.labelPropagationWeightedEager(
+          subPairs.withColumnRenamed("est_jaccard", "weight"))
+        val untouched = priorLabels
+          .join(members.withColumnRenamed("doc_id", "node"), Seq("node"), "left_anti")
+        untouched.unionByName(recomputed)
+          .overwritePartition(s"$indexDir/labels", VersionCol, batchId)
+        // 5. bounded-hop components: same touched-component recompute —
+        // the 3-iteration labels of a node depend only on its own
+        // component's edges, so recompute-over-touched + splice is
+        // EXACTLY the batch nearDupComponents over the full graph
+        val priorC3 = readComponents3(spark, indexDir, batchId)
+        priorC3.join(members, Seq("doc_id"), "left_anti")
+          .unionByName(Dedup.nearDupComponents(subPairs))
+          .overwritePartition(s"$indexDir/components3", VersionCol, batchId)
+      } finally subPairs.unpersist()
+    } finally newPairs.unpersist()
   }
 
   /** One micro-batch of a MIXED change feed — document rows plus a boolean
@@ -280,64 +275,53 @@ object StreamingDedupIndex {
       // A delete-only batch (the takedown path) skips the empty ingest —
       // writing empty signature/pair partitions is pure job overhead.
       val hasAdds = !adds.isEmpty
-      val newSig = Dedup.minhashSignatures(adds).persist()
+      if (hasAdds)
+        Dedup.minhashSignatures(adds).overwritePartition(s"$indexDir/signatures", BatchCol, batchId)
+      val newPairs = (if (hasAdds) probeBatch(spark, indexDir, batchId)
+        else readPairs(spark, indexDir, batchId).limit(0)).persist()
       try {
-        if (hasAdds) newSig.withColumn(BatchCol, lit(batchId))
-          .overwritePartitions(s"$indexDir/signatures", BatchCol)
-        val history = readSignatures(spark, indexDir, batchId)
-        val newPairs = (if (hasAdds)
-          Dedup.minhashLshPairsIncremental(newSig, history.unionByName(newSig))
-        else history.limit(0)
-          .select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
-            lit(0.0).as("est_jaccard"))).persist()
+        if (hasAdds) newPairs.overwritePartition(s"$indexDir/pairs", BatchCol, batchId)
+        // 3. one exact rebuild over the touched components' surviving
+        // edges ∪ the new pairs (disjoint by exactly-once generation,
+        // so no weighted edge is double-counted). SKIPPED entirely when
+        // the derived tables were never built (processBatchCore
+        // deployments): recomputing communities nobody serves would
+        // dominate the forget's cost for nothing.
+        if (!derivedTablesExist(spark, indexDir)) return
+        val prior = StreamingComponents.readComponents(
+          spark, s"$indexDir/components", batchId)
+        val priorLabels = readLabels(spark, indexDir, batchId)
+        val touchNodes = newPairs.select(col("doc_a").as("doc_id"))
+          .unionByName(newPairs.select(col("doc_b").as("doc_id")))
+          .unionByName(dels).distinct()
+        val touchedReps = prior.join(touchNodes, Seq("doc_id"), "left_semi")
+          .select(col("rep")).distinct()
+        val members = prior.join(touchedReps, Seq("rep"), "left_semi")
+          .select(col("doc_id"))
+        val oldEdges = readPairs(spark, indexDir, batchId - 1)
+          .join(members.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
+        val edges = oldEdges.unionByName(newPairs).persist()
         try {
-          if (hasAdds) newPairs.withColumn(BatchCol, lit(batchId))
-            .overwritePartitions(s"$indexDir/pairs", BatchCol)
-          // 3. one exact rebuild over the touched components' surviving
-          // edges ∪ the new pairs (disjoint by exactly-once generation,
-          // so no weighted edge is double-counted). SKIPPED entirely when
-          // the derived tables were never built (processBatchCore
-          // deployments): recomputing communities nobody serves would
-          // dominate the forget's cost for nothing.
-          if (!derivedTablesExist(spark, indexDir)) return
-          val prior = StreamingComponents.readComponents(
-            spark, s"$indexDir/components", batchId)
-          val priorLabels = readLabels(spark, indexDir, batchId)
-          val touchNodes = newPairs.select(col("doc_a").as("doc_id"))
-            .unionByName(newPairs.select(col("doc_b").as("doc_id")))
-            .unionByName(dels).distinct()
-          val touchedReps = prior.join(touchNodes, Seq("doc_id"), "left_semi")
-            .select(col("rep")).distinct()
-          val members = prior.join(touchedReps, Seq("rep"), "left_semi")
-            .select(col("doc_id"))
-          val oldEdges = readPairs(spark, indexDir, batchId - 1)
-            .join(members.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
-          val edges = oldEdges.unionByName(newPairs).persist()
-          try {
-            val rebuilt = Dedup.nearDupComponentsExact(edges)
-            prior.join(touchedReps, Seq("rep"), "left_anti")
-              .select(col("doc_id"), col("rep"))
-              .unionByName(rebuilt.select(col("doc_id"), col("rep")))
-              .withColumn(VersionCol, lit(batchId))
-              .overwritePartitions(s"$indexDir/components", VersionCol)
-            val recomputed = Graph.labelPropagationWeightedEager(
-              edges.withColumnRenamed("est_jaccard", "weight"))
-            priorLabels
-              .join(members.withColumnRenamed("doc_id", "node"), Seq("node"), "left_anti")
-              .unionByName(recomputed)
-              .withColumn(VersionCol, lit(batchId))
-              .overwritePartitions(s"$indexDir/labels", VersionCol)
-            // bounded-hop components over the same surviving edge set:
-            // touched members (incl. every tombstoned doc) leave the prior
-            // table; survivors with edges re-enter via the recompute
-            readComponents3(spark, indexDir, batchId)
-              .join(members, Seq("doc_id"), "left_anti")
-              .unionByName(Dedup.nearDupComponents(edges))
-              .withColumn(VersionCol, lit(batchId))
-              .overwritePartitions(s"$indexDir/components3", VersionCol)
-          } finally edges.unpersist()
-        } finally newPairs.unpersist()
-      } finally newSig.unpersist()
+          val rebuilt = Dedup.nearDupComponentsExact(edges)
+          prior.join(touchedReps, Seq("rep"), "left_anti")
+            .select(col("doc_id"), col("rep"))
+            .unionByName(rebuilt.select(col("doc_id"), col("rep")))
+            .overwritePartition(s"$indexDir/components", VersionCol, batchId)
+          val recomputed = Graph.labelPropagationWeightedEager(
+            edges.withColumnRenamed("est_jaccard", "weight"))
+          priorLabels
+            .join(members.withColumnRenamed("doc_id", "node"), Seq("node"), "left_anti")
+            .unionByName(recomputed)
+            .overwritePartition(s"$indexDir/labels", VersionCol, batchId)
+          // bounded-hop components over the same surviving edge set:
+          // touched members (incl. every tombstoned doc) leave the prior
+          // table; survivors with edges re-enter via the recompute
+          readComponents3(spark, indexDir, batchId)
+            .join(members, Seq("doc_id"), "left_anti")
+            .unionByName(Dedup.nearDupComponents(edges))
+            .overwritePartition(s"$indexDir/components3", VersionCol, batchId)
+        } finally edges.unpersist()
+      } finally newPairs.unpersist()
     } finally dels.unpersist()
   }
 

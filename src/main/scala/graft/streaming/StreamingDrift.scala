@@ -52,8 +52,7 @@ object StreamingDrift {
         coalesce(col("c_ref"), lit(0L)).as("c_ref"),
         coalesce(col("c_cur"), lit(0L)).as("c_cur"))
     TimeSeries.psiOfCounts(filled, keyCol, nBins)
-      .withColumn("batch_id", lit(batchId))
-      .overwritePartitions(metricsDir, "batch_id")
+      .overwritePartition(metricsDir, "batch_id", batchId)
   }
 
   def start(

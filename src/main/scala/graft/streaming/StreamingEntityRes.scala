@@ -89,13 +89,11 @@ object StreamingEntityRes {
       col("c_nationkey").cast("int"), col("c_acctbal").cast("double"),
       col("c_mktsegment")).persist()
     try {
-      newR.withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/records", BatchCol)
+      newR.overwritePartition(s"$indexDir/records", BatchCol, batchId)
       val history = readRecords(spark, indexDir, batchId)
       Entity.resolvePairsIncremental(newR, history.unionByName(newR))
         .select(col("id_a"), col("id_b"), col("dist").cast("int"))
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/pairs", BatchCol)
+        .overwritePartition(s"$indexDir/pairs", BatchCol, batchId)
     } finally newR.unpersist()
   }
 

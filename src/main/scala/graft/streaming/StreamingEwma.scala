@@ -75,8 +75,7 @@ object StreamingEwma {
       .agg(sum(col("c")).as("c"))
       .select(col("event_type"), col("h").cast("long").as("h"),
         col("c").cast("long").as("c"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

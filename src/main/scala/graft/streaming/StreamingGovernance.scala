@@ -136,8 +136,7 @@ object StreamingGovernance {
         .unionByName(Privacy.classStats(nextSlice))
         .select(col("event_type"), col("day"), col("vb"),
           col("cls_n").cast("long").as("cls_n"), col("n_sens").cast("long").as("n_sens"))
-        .withColumn(VersionCol, lit(batchId))
-        .overwritePartitions(viewDir, VersionCol)
+        .overwritePartition(viewDir, VersionCol, batchId)
 
       cuViewDir.foreach { cuDir =>
         readCuView(spark, cuDir, batchId)
@@ -145,8 +144,7 @@ object StreamingGovernance {
           .unionByName(Privacy.classUserCounts(nextSlice))
           .select(col("event_type"), col("day"), col("vb"),
             col("user_id").cast("long").as("user_id"), col("c_u").cast("long").as("c_u"))
-          .withColumn(VersionCol, lit(batchId))
-          .overwritePartitions(cuDir, VersionCol)
+          .overwritePartition(cuDir, VersionCol, batchId)
       }
     } finally { nextSlice.unpersist(); tq.unpersist(): Unit }
 

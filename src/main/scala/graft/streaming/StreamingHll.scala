@@ -71,8 +71,7 @@ object StreamingHll {
     merged
       .select(col("event_type"), col("day"), col("sk"),
         col("n_events").cast("long").as("n_events"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

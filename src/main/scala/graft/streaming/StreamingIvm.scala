@@ -122,8 +122,7 @@ object StreamingIvm {
     merged
       .select(col("grp"), col("n_keys").cast("long").as("n_keys"),
         col("sum_value").cast("decimal(18,2)").as("sum_value"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(viewDir, VersionCol)
+      .overwritePartition(viewDir, VersionCol, batchId)
 
     StreamingCdc.processBatch(batch, batchId, snapshotDir, keyCols, versionCols, deleteCol)
   }
@@ -209,8 +208,7 @@ object StreamingIvm {
       .select(col("grp"), col("n_keys").cast("long").as("n_keys"),
         col("min_value").cast("decimal(18,2)").as("min_value"),
         col("max_value").cast("decimal(18,2)").as("max_value"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(viewDir, VersionCol)
+      .overwritePartition(viewDir, VersionCol, batchId)
 
     StreamingCdc.processBatch(batch, batchId, snapshotDir, keyCols, versionCols, deleteCol)
   }

@@ -108,8 +108,7 @@ object StreamingJoinIvm {
       .filter(col("n_keys") > 0)
       .select(col("grp"), col("n_keys").cast("long").as("n_keys"),
         col("sum_value").cast("decimal(18,2)").as("sum_value"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(viewDir, VersionCol)
+      .overwritePartition(viewDir, VersionCol, batchId)
 
     StreamingCdc.processBatch(batch, batchId, snapshotDir, keyCols, versionCols, deleteCol)
   }

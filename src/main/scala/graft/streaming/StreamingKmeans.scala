@@ -92,8 +92,7 @@ object StreamingKmeans {
       }
     }
     updated.toSeq.toDF("cell", "centroid", "n_hist")
-      .withColumn(VersionCol, org.apache.spark.sql.functions.lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

@@ -72,8 +72,7 @@ object StreamingManifest {
       .select(col("source"), col("n_docs").cast("long").as("n_docs"),
         col("total_chars").cast("long").as("total_chars"),
         col("content_hash").cast("long").as("content_hash"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

@@ -31,8 +31,8 @@ import graft.streaming.StreamingWrites.GuardedWrites
   *
   * Delivery: EXACTLY-ONCE across crash retries by the family mechanism —
   * fingerprints are deterministic in the batch bytes, reads exclude the
-  * current batch's own partition, and dynamic partition overwrite keyed
-  * by batch_id makes a replayed batch REPLACE its first attempt.
+  * current batch's own partition, and overwriting its own batch_id
+  * partition makes a replayed batch REPLACE its first attempt.
   *
   * Scale: per batch one byte pass over THIS batch's media + one banded
   * equi-join (|batch|·4 band rows vs the index) — O(new collisions),
@@ -83,14 +83,12 @@ object StreamingMediaDedup {
     // read this frame
     val newPh = Multimodal.perceptualHash(batch).persist()
     try {
-      newPh.withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/phash", BatchCol)
+      newPh.overwritePartition(s"$indexDir/phash", BatchCol, batchId)
       // probe: batch bands vs history ∪ batch (history read EXCLUDES this
       // batch's own partition so a retry probes what its first attempt saw)
       val history = readPhash(spark, indexDir, batchId)
       Multimodal.mediaNearDupPairsIncremental(newPh, history.unionByName(newPh))
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(s"$indexDir/pairs", BatchCol)
+        .overwritePartition(s"$indexDir/pairs", BatchCol, batchId)
     } finally newPh.unpersist()
   }
 

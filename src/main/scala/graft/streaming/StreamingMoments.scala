@@ -78,8 +78,7 @@ object StreamingMoments {
       .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"),
         sum(col("s2")).as("s2"), sum(col("s3")).as("s3"))
     normalize(merged)
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

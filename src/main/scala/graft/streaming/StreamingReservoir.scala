@@ -80,8 +80,7 @@ object StreamingReservoir {
       .select(col("source"), (col("i") + 1).cast("int").as("rank"),
         col("t._2").as("doc_id"), col("t._1").as("race_key"))
     merged
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

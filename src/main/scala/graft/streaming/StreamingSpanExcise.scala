@@ -87,11 +87,9 @@ object StreamingSpanExcise {
         .join(history.select(col("span_h")), Seq("span_h"), "left_anti")
       val canon = history.unionByName(batchCanon)
       TextOps.excisedRebuild(batch, toks, spans, canon, spanTokens)
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(cleanDir, BatchCol)
+        .overwritePartition(cleanDir, BatchCol, batchId)
       batchCanon
-        .withColumn(BatchCol, lit(batchId))
-        .overwritePartitions(indexDir, BatchCol)
+        .overwritePartition(indexDir, BatchCol, batchId)
     } finally {
       spans.unpersist()
       toks.unpersist()

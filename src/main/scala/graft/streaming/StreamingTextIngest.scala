@@ -18,12 +18,12 @@ import graft.streaming.StreamingWrites.GuardedWrites
   *
   * Delivery: EXACTLY-ONCE across crash retries by the StreamingAnnIngest
   * mechanism — tokenization is a deterministic projection, Structured
-  * Streaming pins batch contents in the checkpoint, and dynamic
-  * partition overwrite keyed by batch_id makes a replayed batch REPLACE
-  * its own first attempt.
+  * Streaming pins batch contents in the checkpoint, and each table is
+  * written as its own batch_id partition (`overwritePartition`), so a
+  * replayed batch REPLACES its own first attempt.
   *
-  * Scale: per batch one narrow explode + one batch-keyed hash agg (the
-  * postings of THIS batch), two partitioned writes. The accumulated
+  * Scale: per batch one narrow posexplode + one batch-keyed hash agg (the
+  * postings of THIS batch), three partition writes. The accumulated
   * postings table is the one retrieval structure that actually scales —
   * production buckets it by `tok` so each query term reads its own
   * buckets (the same bucket-pruning contract DedupSpec proves for the
@@ -67,30 +67,32 @@ object StreamingTextIngest {
 
   /** The accumulated positional index (doc_id, pos, tok; 1-based) —
     * what `TextOps.phraseSearch` answers exact-phrase queries from.
+    * Contract: each (doc_id, pos) appears at most once, i.e. a doc_id is
+    * ingested by one batch only (re-ingest goes through the delete path,
+    * `processCdcBatch`). `phraseSearch` counts slot matches per phrase
+    * start and relies on it.
     */
   def readPositions(spark: SparkSession, indexDir: String): DataFrame =
     readOr(spark, s"$indexDir/positions", positionsSchema).drop(BatchCol)
 
-  /** One micro-batch: tokenize (doc_id, text) rows into this batch's
-    * postings + doc lengths, write under batch_id partitions. Idempotent
-    * in `batchId`.
+  /** One micro-batch: tokenize (doc_id, text) rows once into this
+    * batch's positions, then postings (the positions counted per
+    * (doc_id, tok)) and doc lengths, each written as the batch's own
+    * batch_id partition. Idempotent in `batchId`; the plans carry no
+    * batch-specific literal, so every batch reuses the same generated code.
     */
   def processBatch(batch: DataFrame, batchId: Long, indexDir: String): Unit = {
     val toks = split(col("text"), " ")
-    val postings = batch
-      .select(col("doc_id"), explode(toks).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn(BatchCol, lit(batchId))
-    val doclens = batch
-      .select(col("doc_id"), size(toks).cast("long").as("dl"))
-      .withColumn(BatchCol, lit(batchId))
     val positions = batch
       .select(col("doc_id"), posexplode(toks).as(Seq("pos0", "tok")))
       .select(col("doc_id"), (col("pos0") + 1).cast("int").as("pos"), col("tok"))
-      .withColumn(BatchCol, lit(batchId))
+    val postings = positions
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"))
+    val doclens = batch
+      .select(col("doc_id"), size(toks).cast("long").as("dl"))
     def write(df: DataFrame, sub: String): Unit =
-      df.overwritePartitions(s"$indexDir/$sub", BatchCol)
+      df.overwritePartition(s"$indexDir/$sub", BatchCol, batchId)
     write(postings, "postings")
     write(doclens, "doclens")
     write(positions, "positions")

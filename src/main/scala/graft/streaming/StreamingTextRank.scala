@@ -69,8 +69,7 @@ object StreamingTextRank {
       .groupBy(col("tok_a"), col("tok_b"))
       .agg(sum(col("cooc")).as("cooc"))
       .select(col("tok_a"), col("tok_b"), col("cooc").cast("long").as("cooc"))
-      .withColumn(VersionCol, lit(batchId))
-      .overwritePartitions(stateDir, VersionCol)
+      .overwritePartition(stateDir, VersionCol, batchId)
   }
 
   def start(

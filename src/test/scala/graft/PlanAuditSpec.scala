@@ -112,24 +112,6 @@ class PlanAuditSpec extends AnyFunSpec with Matchers with SparkSessionTestWrappe
     // one-row min-bucket-count aggregate broadcast-crossed onto the
     // few-row per-bucket counts (never the corpus)
     "length_matched_sample" -> Set("nested-loop-join"),
-    // one-row (n_docs, sum_dl) corpus-stats aggregate broadcast-crossed
-    // onto the posting join (the BM25 avgdl/idf denominators)
-    "bm25_topk" -> Set("nested-loop-join"),
-    // the from-index serving paths share the inline rankers' scoring
-    // plans and their labeled one-row corpus-stats crosses
-    "bm25_from_index_topk" -> Set("nested-loop-join"),
-    "ql_from_index_topk" -> Set("nested-loop-join"),
-    "rrf_from_index" -> Set("nested-loop-join"),
-    // PRF composes the BM25/RRF chains, inheriting their labeled one-row
-    // corpus-stats crosses
-    "prf_hybrid_rerank" -> Set("nested-loop-join"),
-    // same one-row corpus-stats cross in the QL smoothing denominator
-    "ql_topk" -> Set("nested-loop-join"),
-    // rrf composes the BM25 and QL chains, inheriting both stats crosses
-    "rrf_fusion" -> Set("nested-loop-join"),
-    // the nDCG eval runs all three systems, inheriting the same labeled
-    // one-row corpus-stats crosses
-    "retrieval_ndcg_report" -> Set("nested-loop-join"),
     // one-row (nr, nt) feature-total aggregate broadcast-crossed onto the
     // doc×bucket counts (the DSIR Laplace denominators)
     "dsir_resample" -> Set("nested-loop-join"),

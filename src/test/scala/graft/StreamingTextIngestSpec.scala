@@ -87,10 +87,10 @@ class StreamingTextIngestSpec extends AnyFunSpec with Matchers with SparkSession
 
   it("multi-term phrase search reads only the phrase words' buckets, every arm") {
     // the scale path for phraseSearch: the POSITIONAL table bucketed by
-    // tok means each arm of the n-way consecutive-position self-join
-    // scans only its own word's bucket files — the n scans in the plan
-    // must each carry a proper SelectedBucketsCount subset, and results
-    // must equal the unbucketed path bit for bit
+    // tok means its one scan reads only the phrase words' bucket files —
+    // the plan holds exactly one bucketed scan, selecting at most one
+    // bucket per word — and results must equal the unbucketed path bit
+    // for bit
     val docs = docsDf(Seq(
       6L -> "customer order merge runs the customer order merge path",
       7L -> "customer count order by merge", 8L -> "unrelated text entirely"))
@@ -104,12 +104,11 @@ class StreamingTextIngestSpec extends AnyFunSpec with Matchers with SparkSession
       val phrases = Seq(3 -> "customer order merge")
       val served = TextOps.phraseSearch(spark.table("graft_positions_b"), phrases)
       val plan = served.queryExecution.executedPlan.toString
-      // one pruned scan per phrase word: every bucketed scan in the plan
-      // selects a strict subset, and there are exactly 3 of them
+      // one pruned scan for all three phrase words
       val pruned = "SelectedBucketsCount: ([0-9]+) out of 8".r
         .findAllMatchIn(plan).map(_.group(1).toInt).toSeq
-      pruned.length shouldBe 3
-      all(pruned) should be <= 7
+      pruned.length shouldBe 1
+      all(pruned) should be <= 3
       served.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet shouldBe
         TextOps.phraseSearch(pos, phrases)
           .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
@@ -120,6 +119,56 @@ class StreamingTextIngestSpec extends AnyFunSpec with Matchers with SparkSession
       spark.conf.set(conf, prev)
       spark.sql("DROP TABLE IF EXISTS graft_positions_b")
     }
+  }
+
+  it("repeated-word phrases count overlapping and adjacent occurrences exactly, served ≡ inline") {
+    // the single-scan phraseSearch fills one slot per (word, offset): a
+    // repeated word fills each of its slots separately, so "join join"
+    // matches twice in "join join join" (overlapping) and "hash join"
+    // twice in "hash join hash join" (adjacent)
+    val docs = Seq(
+      10L -> "join join join", 11L -> "hash join hash join scan",
+      12L -> "join hash join join", 13L -> "scan join scan join")
+    val dir = java.nio.file.Files.createTempDirectory("graft-sti-phrase").toString
+    StreamingTextIngest.processBatch(docsDf(docs.take(2)), 0L, dir)
+    StreamingTextIngest.processBatch(docsDf(docs.drop(2)), 1L, dir)
+    val phrases = Seq(1 -> "join join", 2 -> "hash join", 3 -> "hash join hash",
+      4 -> "scan join scan")
+    def counts(pos: org.apache.spark.sql.DataFrame) =
+      TextOps.phraseSearch(pos, phrases).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    val served = counts(StreamingTextIngest.readPositions(spark, dir))
+    served shouldBe Set(
+      (1, 10L, 2L), (1, 12L, 1L),
+      (2, 11L, 2L), (2, 12L, 1L),
+      (3, 11L, 1L),
+      (4, 13L, 1L))
+    served shouldBe counts(TextOps.positionalIndexOf(docsDf(docs)))
+
+    // the rankers agree with the inline build on the same corpus, with a
+    // query that repeats a term
+    val rq = Seq(1 -> Seq("join", "join"), 2 -> Seq("hash", "scan"))
+    val p = StreamingTextIngest.readPostings(spark, dir)
+    val d = StreamingTextIngest.readDoclens(spark, dir)
+    ranked(TextOps.bm25TopKFromIndex(p, d, rq)) shouldBe
+      ranked(TextOps.bm25TopK(docsDf(docs), rq))
+    ranked(TextOps.qlTopKFromIndex(p, d, rq)) shouldBe
+      ranked(TextOps.qlTopK(docsDf(docs), rq))
+  }
+
+  it("the nDCG qrels count a doc's terms once when two batches ingested the doc") {
+    // qrels read the postings' (doc_id, tok) pairs; a doc written by two
+    // batches has each pair twice, which must not raise its relevance
+    val dir = java.nio.file.Files.createTempDirectory("graft-sti-ndcg").toString
+    val corpus = Seq(20L -> "hash join", 21L -> "hash scan", 22L -> "vector scan")
+    StreamingTextIngest.processBatch(docsDf(corpus), 0L, dir)
+    StreamingTextIngest.processBatch(docsDf(corpus.take(1)), 1L, dir)
+    val index = (StreamingTextIngest.readPostings(spark, dir),
+      StreamingTextIngest.readDoclens(spark, dir))
+    // both "hash" docs have rel 1, so every ranking of them is ideal
+    val report = TextOps.retrievalNdcgReport(docsDf(corpus), Seq(1 -> Seq("hash")),
+      index = Some(index)).collect().map(r => r.getString(1) -> r.getDouble(2)).toMap
+    report shouldBe Map("bm25" -> 1.0, "ql" -> 1.0, "rrf" -> 1.0)
   }
 
   it("a replayed batch is exactly-once: postings are not duplicated") {
