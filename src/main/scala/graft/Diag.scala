@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local perf diagnosis: run each query N times, print per-run seconds.
   * Usage: Diag <sfDir> [repeats] [nameFilter...]
   */
@@ -11,13 +9,7 @@ object Diag {
     val reps = if (args.length > 1) args(1).toInt else 3
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     val explain = sys.env.contains("SPARK_GRAFT_EXPLAIN")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {

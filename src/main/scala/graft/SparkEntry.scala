@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts._
 import graft.model.Tables
 import graft.ops.{ActivityOps, Dedup, Multimodal, Relational, Sampling, Sketches, TextOps, VectorOps}
 import graft.oracle.DuckDbOracles
@@ -33,7 +34,7 @@ object SparkEntry {
   private val ProfileCols =
     Seq("event_id", "ts", "user_id", "event_type", "value", "props")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- reference parity (SURVEY.md §2) over `events` -------------------
     "windowed_count" -> ((s, dir) =>
       ActivityOps.windowedCount(
@@ -1520,16 +1521,9 @@ object SparkEntry {
     // planted copies (exact +-1/64 component nudges, oracle-replayable) —
     // otherwise a realistic threshold would have nothing to find.
     "embedding_lsh_pairs" -> ((s, dir) => {
-      // the planting guard (max-id / dim corpus aggregate) proves a STATIC
-      // property of the sf dir — run it once per (application, dir), not
-      // one corpus-scan job per serve; marked done only AFTER it passes
-      // (plantedCorpus runs it eagerly), so a failing guard keeps failing
-      val key = s"${s.sparkContext.applicationId}|$dir"
-      val needGuard = !plantedGuardDone.contains(key)
-      val df = VectorOps.lshNearDupPairsVec(
-        VectorOps.plantedCorpus(Tables.embeddings(s, dir), guard = needGuard))
-      if (needGuard) plantedGuardDone.put(key, true)
-      df
+      plantedGuardOf(s, dir)
+      VectorOps.lshNearDupPairsVec(
+        VectorOps.plantedCorpus(Tables.embeddings(s, dir), guard = false))
     }),
     "ann_brute_topk" -> ((s, dir) => VectorOps.bruteForceTopK(Tables.embeddings(s, dir))),
     "ann_ivf_topk" -> ((s, dir) => VectorOps.ivfTopK(Tables.embeddings(s, dir))),
@@ -1975,10 +1969,9 @@ object SparkEntry {
     // replays the inline fingerprint + rank, so hash-green certifies
     // from-index == inline.
     "media_phash_topk" -> ((s, dir) => {
-      mediaPairsOf(s, dir) // ensure the artifact exists
       Multimodal.mediaPhashTopKFromPhash(
         graft.streaming.StreamingMediaDedup.readPhash(s,
-          artifactDirOf("media-dedup", s, dir)(_ => ()), Long.MaxValue))
+          mediaDedupDirOf(s, dir), Long.MaxValue))
     }),
     // The APPLY path: exact CC over the perceptual pair graph (read from
     // the same maintained index), one min-id keeper per component,
@@ -2032,10 +2025,9 @@ object SparkEntry {
         Multimodal.mediaQualityGate(
           Multimodal.decodeFeaturesArrow(media)).select(col("media_id")).eagerCkpt
       }
-      mediaPairsOf(s, dir) // ensure the fingerprint artifact exists
       val pairs = Multimodal.mediaNearDupPairsCappedFromPhash(
           graft.streaming.StreamingMediaDedup.readPhash(s,
-            artifactDirOf("media-dedup", s, dir)(_ => ()), Long.MaxValue))
+            mediaDedupDirOf(s, dir), Long.MaxValue))
         .join(gated.withColumnRenamed("media_id", "media_a"), Seq("media_a"), "left_semi")
         .join(gated.withColumnRenamed("media_id", "media_b"), Seq("media_b"), "left_semi")
       val comps = graft.ops.Dedup.nearDupComponentsExact(
@@ -2051,66 +2043,6 @@ object SparkEntry {
     }),
   )
 
-  /** The inverted-index pair (postings, doclens) exactly as
-    * StreamingTextIngest materializes it — shared by the three from-index
-    * retrieval queries.
-    */
-  /** The near-dup graph artifact, built ONCE per (application, sf dir) and
-    * served to every graph/survivorship query from parquet — the
-    * from-index pattern the retrieval queries above use for postings. The
-    * LSH + weighted-LPA + exact-CC chain used to run inline in ~15
-    * registered queries (~25 s of the bench was one identical chain
-    * recomputed per report); with the artifact it runs exactly once.
-    * Queries keep their inline-derived oracle SQL, so a hash-green round
-    * certifies from-artifact ≡ inline per query (DedupIndexSpec pins the
-    * same equivalence as a unit test).
-    *
-    * The memo holds only the artifact's DIRECTORY; readers re-open the
-    * parquet each call, so a bench-loop `clearCache()` between reps
-    * cannot invalidate anything — the artifact lives on disk, exactly as
-    * it would in production storage.
-    *
-    * LOCAL-MODE / STATIC-FIXTURE ASSUMPTION: the memo is keyed on
-    * (applicationId, sf dir) with NO data-change invalidation — if the
-    * parquet under `dir` were regenerated within one application, the
-    * stale artifact would keep serving, and the temp-dir paths are
-    * driver-local filesystem only. Both are fine for the bench/driver
-    * contract (fixtures are immutable per run, Spark runs local[32]); a
-    * deployment serving live corpora uses the versioned production
-    * layout (`DedupIndex.buildVersioned` + the `v=N` commit-marker
-    * cutover) or the StreamingDedupIndex maintenance fold instead, and
-    * can invalidate this memo explicitly via `invalidateDedupIndex`.
-    */
-  private val artifactDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  // un-memoized temp roots (the per-invocation takedown artifact builds)
-  // that the exit sweep must also vacuum — under Bench's best-of-reps +
-  // retry passes a leak here is several artifact trees per round
-  private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  // one-time JVM-exit sweep of the temp artifact dirs: bench/driver
-  // processes on a shared machine must not accumulate pair/label/
-  // component parquet under /tmp across invocations
-  private lazy val artifactCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      (artifactDirs.values ++ tempRoots.asScala).foreach { d =>
-        def rec(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rec)); f.delete(): Unit
-        }
-        rec(new java.io.File(d))
-      }
-    }))
-
-  /** A fresh temp root registered with the JVM-exit sweep (for artifact
-    * builds that must NOT be memoized, e.g. the takedown report whose
-    * sweep mutates what it builds).
-    */
-  private[graft] def sweptTempDir(prefix: String): String = {
-    artifactCleanupHook
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    tempRoots.add(tmp)
-    tmp
-  }
-
   /** Recursive directory copy (driver-local temp trees only — the
     * takedown report clones its pristine capped artifacts instead of
     * re-running the eight Spark builds per invocation).
@@ -2123,78 +2055,7 @@ object SparkEntry {
       else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING): Unit
     }
   }
-  /** Build-once memo for derived serve-side artifacts (the dedup graph,
-    * the TextRank co-occurrence table), keyed (kind, application, sf dir).
-    * synchronized: TrieMap.getOrElseUpdate does NOT guarantee a single
-    * evaluation of the thunk under contention, and these thunks run
-    * multi-second builds — two concurrent first-touch queries must not
-    * both build (and orphan the loser's directory).
-    */
-  private def artifactDirOf(
-      kind: String, s: org.apache.spark.sql.SparkSession, dir: String)(
-      build: String => Unit): String =
-    artifactDirs.synchronized {
-      artifactDirs.getOrElseUpdate(s"$kind|${s.sparkContext.applicationId}|$dir", {
-        artifactCleanupHook
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft-$kind").toString
-        build(tmp)
-        tmp
-      })
-    }
 
-  private[graft] def dedupIndexOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): graft.ops.DedupIndex.Frames =
-    graft.ops.DedupIndex.read(s,
-      artifactDirOf("dedup-index", s, dir) { tmp =>
-        graft.ops.DedupIndex.build(Tables.documents(s, dir), tmp)
-      })
-
-  /** The navigable-graph ANN artifact, built once per (application, sf
-    * dir): proximity edges + assigned cell index + coarse centroids —
-    * the three tables `graphTopKFromIndex` serves from (in production the
-    * cell index is exactly what StreamingAnnIngest maintains, edges are
-    * rebuilt per corpus version like the DedupIndex artifact). Oracles
-    * replay the full inline derivation, so hash-green certifies
-    * from-artifact == inline.
-    */
-  private[graft] def annGraphOf(s: org.apache.spark.sql.SparkSession, dir: String): (
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) = {
-    val d = artifactDirOf("ann-graph", s, dir) { tmp =>
-      val emb = Tables.embeddings(s, dir)
-      // OCCUPANCY-SIZED quantizer (round 13, SCALING.md §4): the graph
-      // build's within-cell candidate join is quadratic in cell occupancy,
-      // and the fixed 10-cell label quantizer OOMed the x30 audit corpus;
-      // cells = ceil(N/64) bounds candidate volume linearly no matter the
-      // corpus. Resizes in production ride QuantizerRefresh.cutoverWithGraph.
-      val coarse = kmCentsAutoOf(s, dir)
-      coarse.write.mode("overwrite").parquet(s"$tmp/cents")
-      VectorOps.graphEdges(emb, coarse = Some(coarse))
-        .write.mode("overwrite").parquet(s"$tmp/edges")
-      // the HNSW upper layer: same build over the hash-sampled subset
-      VectorOps.graph2Layer1Edges(emb, coarse = Some(coarse))
-        .write.mode("overwrite").parquet(s"$tmp/edges1")
-      val centArr = coarse.collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-      VectorOps.assignCells(emb, centArr)
-        .select(col("vec_id"), col("cell"), col("v").as("cv"),
-          graft.functions.ArrayDotProduct.dot(col("v"), col("v")).as("sq"))
-        .select(col("vec_id"), col("cell"), col("cv"), sqrt(col("sq")).as("cn"))
-        .write.mode("overwrite").parquet(s"$tmp/index")
-    }
-    (s.read.schema("src bigint, dst bigint, cos double").parquet(s"$d/edges"),
-      s.read.schema("vec_id bigint, cell int, cv array<double>, cn double")
-        .parquet(s"$d/index"),
-      s.read.schema("cell int, centroid array<double>").parquet(s"$d/cents"))
-  }
-
-  /** The entity-resolution index (records + matched pairs), built once
-    * per (application, sf dir) by ONE StreamingEntityRes fold over the
-    * planted customer table — the serve-side cache for
-    * `entity_resolution_pairs` and `entity_golden_records`. Registered
-    * queries keep their inline-derived oracle SQL, so a hash-green round
-    * certifies the maintained index reproduces the inline derivation.
-    */
   /** Fresh-artifact batched-takedown accounting (see the
     * `takedown_batch_report` registration). Requests: ticket 0 names
     * docs/vecs ≡ 7 (mod 100); ticket 1 names docs ≡ 23 (mod 100), the
@@ -2217,14 +2078,8 @@ object SparkEntry {
     // the capped corpus' label-mean quantizer, memoized like labelCentsOf
     // (the sweep's graph-rebuild handle needs it EVERY invocation — the
     // per-rep corpus aggregate + collect was pure repeated work)
-    val centArr = kmCentsMemo.synchronized {
-      kmCentsMemo.getOrElseUpdate(s"tdcents|${s.sparkContext.applicationId}|$dir", {
-        VectorOps.centroids(emb)
-          .select(col("label").as("cell"), col("centroid"))
-          .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-      })
-    }
-    val cents = { import s.implicits._; centArr.toDF("cell", "centroid") }
+    val cents = centroidsOf("tdcents", s, dir)(
+      VectorOps.centroids(emb).select(col("label").as("cell"), col("centroid")))
     // The sweep MUTATES what it audits, so every invocation needs fresh
     // artifacts — but "fresh" means fresh FILES, not fresh Spark jobs:
     // the eight capped builds are deterministic per (application, dir),
@@ -2232,7 +2087,7 @@ object SparkEntry {
     // clones the (cap-bounded, few-MB) directory and sweeps the clone.
     // This took the query from ~24 s/rep (8 rebuilt artifacts every rep)
     // to the sweep+audit cost alone.
-    val pristine = artifactDirOf("takedown-pristine", s, dir) { tmp =>
+    val pristine = dirOf("takedown-pristine", s, dir) { tmp =>
       // eight independent builds into disjoint subdirs — overlap them
       // (guide §2.6) exactly like the sweep overlaps the forgets
       TakedownSweep.runConcurrently(Seq(
@@ -2256,275 +2111,32 @@ object SparkEntry {
       graphAnn = Some(TakedownSweep.GraphAnnHandle(s"$tmp/graph", cents)),
       mediaIndexDir = Some(s"$tmp/media"),
       entityIndexDir = Some(s"$tmp/entity"))
-    // Each id frame is referenced by every audit branch (broadcast build)
-    // and by the folded sweep — materialize the handful of ids ONCE so
-    // the ~7 reads per frame stop re-scanning the base parquet (and, for
-    // media, re-deriving the planted-dup media table) per reference.
-    // The frames are deterministic per (application, dir) — memoize the
-    // materialization itself (round 14: the five eagerCkpt jobs were
-    // repeated per invocation; ticket ids are fixture inputs, the same
-    // trained-once class as the memoized artifacts, and the sweep still
-    // re-executes fully against the fresh clone every invocation).
-    val reqs = takedownReqMemo.synchronized {
-      takedownReqMemo.getOrElseUpdate(
-        s"${s.sparkContext.applicationId}|$dir", {
-          import graft.ops.Materialize.EagerOps
-          val req0 = TakedownSweep.Request(
-            docIds = Some(docs.filter(pmod(col("doc_id"), lit(100)) === 7)
-              .select(col("doc_id")).eagerCkpt),
-            vecIds = Some(emb.filter(pmod(col("vec_id"), lit(100)) === 7)
-              .select(col("vec_id")).eagerCkpt))
-          val req1 = TakedownSweep.Request(
-            docIds = Some(docs.filter(pmod(col("doc_id"), lit(100)) === 23)
-              .select(col("doc_id")).eagerCkpt),
-            mediaIds = Some(media.filter(pmod(col("media_id"), lit(97)) === 0 &&
-              col("media_id") < Multimodal.PlantOffset)
-              .select(col("media_id")).eagerCkpt),
-            custIds = Some(cust.filter(pmod(col("c_custkey"), lit(100)) === 0)
-              .select(col("c_custkey")).eagerCkpt))
-          Seq(req0, req1)
-        })
+    // The ticket ids are fixture inputs, deterministic per (application,
+    // dir): collect the few dozen ids once, with their source column's
+    // schema, and rebuild each id frame as a local relation per serve, so
+    // the ~7 audit reads per frame never re-scan the base parquet (or, for
+    // media, re-derive the planted-dup table) and no frame outlives its
+    // serve. The sweep still re-executes fully against the fresh clone.
+    val ids = once("takedown-tickets", s, dir) {
+      Seq(
+        docs.filter(pmod(col("doc_id"), lit(100)) === 7).select(col("doc_id")),
+        emb.filter(pmod(col("vec_id"), lit(100)) === 7).select(col("vec_id")),
+        docs.filter(pmod(col("doc_id"), lit(100)) === 23).select(col("doc_id")),
+        media.filter(pmod(col("media_id"), lit(97)) === 0 &&
+          col("media_id") < Multimodal.PlantOffset).select(col("media_id")),
+        cust.filter(pmod(col("c_custkey"), lit(100)) === 0).select(col("c_custkey"))
+      ).map(df => (df.schema, df.collect()))
     }
+    val Seq(doc0, vec0, doc1, media1, cust1) = ids.map { case (schema, rows) =>
+      Some(s.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+    }
+    val reqs = Seq(
+      TakedownSweep.Request(docIds = doc0, vecIds = vec0),
+      TakedownSweep.Request(docIds = doc1, mediaIds = media1, custIds = cust1))
     TakedownSweep.sweepBatchReport(s, reqs, arts, batchId = 1L)
   }
 
-  private[graft] def entityIndexOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): String =
-    artifactDirOf("entity-res", s, dir) { tmp =>
-      graft.streaming.StreamingEntityRes.processBatch(
-        graft.ops.Entity.withPlantedDirty(Tables.customer(s, dir)), 0L, tmp)
-    }
-
-  /** The layer-1 (upper) graph of the same memoized artifact. */
-  private[graft] def annGraphLayer1Of(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    annGraphOf(s, dir) // ensure the artifact exists
-    val d = artifactDirOf("ann-graph", s, dir)(_ => ())
-    s.read.schema("src bigint, dst bigint, cos double").parquet(s"$d/edges1")
-  }
-
-  /** Trained PQ codebooks memoized per (application, sf dir, variant) —
-    * driver-side state of m·k·subdim doubles (tiny), the production
-    * "codebooks trained once offline" contract the from-index PQ tier
-    * already serves under: every PQ query used to re-run the Lloyd loop
-    * (3 driver-collect rounds) per serve. Oracles replay training inline,
-    * so hash-green certifies memo ≡ inline. Cleared alongside the
-    * artifact-dir memo by `invalidateDedupIndex`.
-    */
-  private val pqCbsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, VectorOps.PqCbs]
-
-  /** Lloyd-quantizer centroids memoized per (application, sf dir) — the
-    * same trained-once contract as the PQ codebooks (k×dim doubles).
-    */
-  private val kmCentsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Seq[Double])]]
-
-  /** (application, sf dir) pairs whose planted-corpus guard aggregate has
-    * already run and passed — the guard proves a static property of the
-    * corpus, so one check per process suffices (see embedding_lsh_pairs).
-    */
-  private val plantedGuardDone =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
-  /** The takedown report's materialized ticket-id frames per
-    * (application, sf dir) — see takedownBatchReportOf.
-    */
-  private val takedownReqMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[graft.streaming.TakedownSweep.Request]]
-
-  private[graft] def kmCentsOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val arr = kmCentsMemo.synchronized {
-      kmCentsMemo.getOrElseUpdate(s"km|${s.sparkContext.applicationId}|$dir", {
-        VectorOps.kmeansCentroids(Tables.embeddings(s, dir), k = 10, iters = 3)
-          .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-      })
-    }
-    import s.implicits._
-    arr.toDF("cell", "centroid")
-  }
-
-  /** The OCCUPANCY-SIZED Lloyd quantizer (k = ceil(N/64), SCALING.md
-    * §3/§4's scale knob), memoized like kmCentsOf — the production
-    * quantizer the graph artifact and the auto-IVF tier serve under.
-    */
-  private[graft] def kmCentsAutoOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val arr = kmCentsMemo.synchronized {
-      kmCentsMemo.getOrElseUpdate(s"kmauto|${s.sparkContext.applicationId}|$dir", {
-        VectorOps.kmeansCentroidsAuto(Tables.embeddings(s, dir))
-          .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-      })
-    }
-    import s.implicits._
-    arr.toDF("cell", "centroid")
-  }
-
-  /** Label-mean coarse centroids memoized per (application, sf dir) — the
-    * FIXED pedagogical quantizer every inline fixed-k query derives per
-    * serve (one corpus-wide 64-column aggregation + collect each time).
-    * k×dim doubles of driver state, the same trained-once contract as
-    * kmCentsOf; values are the exact deterministic aggregate the inline
-    * derivation produces, so passing the memo as `coarse` changes no
-    * query's result (oracles keep replaying the inline derivation).
-    */
-  private[graft] def labelCentsOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val arr = kmCentsMemo.synchronized {
-      kmCentsMemo.getOrElseUpdate(s"label|${s.sparkContext.applicationId}|$dir", {
-        VectorOps.centroids(Tables.embeddings(s, dir))
-          .select(col("label").as("cell"), col("centroid"))
-          .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-      })
-    }
-    import s.implicits._
-    arr.toDF("cell", "centroid")
-  }
-
-  /** The maintained FIXED-QUANTIZER cell index, built once per
-    * (application, sf dir) by ONE StreamingAnnIngest fold over the corpus
-    * — the (vec_id, cell, cv, cn, s, q, codes, mp, mpn, bw) table every
-    * fixed-k serving tier reads instead of re-assigning / re-encoding the
-    * corpus per serve (the round-13 from-index pattern, VERDICT r13 #1,
-    * extended from the auto tier to the fixed tier). Assignment, int8
-    * quantization, PQ encoding, the MRL prefix and the packed sign word
-    * are all deterministic projections of the same corpus, so serving
-    * from the index is bit-identical to the inline derivation the
-    * registered oracles replay — hash-green certifies from-index ≡ inline.
-    */
-  private[graft] def ivfIndexOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val d = artifactDirOf("ivf-index", s, dir) { tmp =>
-      val book = graft.functions.PqBook(pqCbsOf(s, dir, "plain"), VectorOps.PqSubDim)
-      graft.streaming.StreamingAnnIngest.processBatch(
-        Tables.embeddings(s, dir), 0L, labelCentsOf(s, dir),
-        s"$tmp/index", book = Some(book))
-    }
-    graft.streaming.StreamingAnnIngest.readIndex(s, s"$d/index")
-  }
-
-  /** The maintained inverted text index, built once per (application, sf
-    * dir) by ONE StreamingTextIngest fold over the corpus — the
-    * (postings, doclens) tables the `*_from_index` lexical rankers read
-    * instead of re-tokenizing + re-aggregating the corpus per serve
-    * (round 14 — the same from-index retirement as the vector tier;
-    * tokenization and tf/dl aggregation are deterministic, so hash-green
-    * certifies from-index ≡ inline).
-    */
-  private[graft] def textIndexOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): (
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val d = artifactDirOf("text-index", s, dir) { tmp =>
-      graft.streaming.StreamingTextIngest.processBatch(
-        Tables.documents(s, dir), 0L, s"$tmp/index")
-    }
-    (graft.streaming.StreamingTextIngest.readPostings(s, s"$d/index"),
-      graft.streaming.StreamingTextIngest.readDoclens(s, s"$d/index"))
-  }
-
-  /** The positional table of the same maintained text index (1-based
-    * positions of the identical split-on-space tokenization) — what
-    * `phrase_search` answers from instead of re-posexploding the corpus.
-    */
-  private[graft] def textPositionsOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    textIndexOf(s, dir) // ensure the artifact exists
-    val d = artifactDirOf("text-index", s, dir)(_ => ())
-    graft.streaming.StreamingTextIngest.readPositions(s, s"$d/index")
-  }
-
-  /** The maintained SPANN posting index under the same fixed quantizer,
-    * built once per (application, sf dir) by ONE StreamingSpannIngest fold
-    * — closure assignment is a deterministic projection, so serving from
-    * the postings is bit-identical to the inline spannAssign derivation.
-    */
-  private[graft] def spannIndexOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val d = artifactDirOf("spann-index", s, dir) { tmp =>
-      graft.streaming.StreamingSpannIngest.processBatch(
-        Tables.embeddings(s, dir), 0L, labelCentsOf(s, dir), s"$tmp/index")
-    }
-    graft.streaming.StreamingSpannIngest.readIndex(s, s"$d/index")
-  }
-
-  private[graft] def pqCbsOf(
-      s: org.apache.spark.sql.SparkSession, dir: String, variant: String): VectorOps.PqCbs =
-    pqCbsMemo.synchronized {
-      pqCbsMemo.getOrElseUpdate(s"$variant|${s.sparkContext.applicationId}|$dir", {
-        val emb = Tables.embeddings(s, dir)
-        variant match {
-          case "plain" => VectorOps.pqCodebooks(emb)
-          case "rot" => VectorOps.pqCodebooks(VectorOps.rotatedEmbeddings(emb))
-          case "opq" => VectorOps.pqCodebooks(VectorOps.opqEmbeddings(emb))
-          case "rpq" => VectorOps.ivfRpqCodebooks(emb)
-          case v => throw new IllegalArgumentException(s"pqCbsOf: unknown variant $v")
-        }
-      })
-    }
-
-  /** The per-(doc, class) fixed-point NB score table, built once per
-    * (application, sf dir) — classify/confusion/margin are all rollups of
-    * it (each used to re-run the hashed token scan + C-fanout scoring).
-    */
-  private[graft] def nbScoresOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val d = artifactDirOf("nb-scores", s, dir) { tmp =>
-      graft.ops.Classify.nbLangScores(Tables.documents(s, dir))
-        .write.mode("overwrite").parquet(s"$tmp/scores")
-    }
-    s.read.schema("doc_id bigint, lang string, cls string, score_fp bigint")
-      .parquet(s"$d/scores")
-  }
-
-  /** The perceptual media near-dup pair graph, built once per
-    * (application, sf dir) by ONE StreamingMediaDedup fold over the
-    * planted media table — the serve-side cache for `media_neardup_pairs`
-    * and `media_dedup_apply`, and the from-index proof: the registered
-    * queries keep their inline-derived oracle SQL, so a hash-green round
-    * certifies the maintained index reproduces the inline derivation.
-    */
-  private[graft] def mediaPairsOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.streaming.StreamingMediaDedup.readPairs(s,
-      artifactDirOf("media-dedup", s, dir) { tmp =>
-        graft.streaming.StreamingMediaDedup.processBatch(
-          Multimodal.mediaTable(
-            Multimodal.withPlantedMediaDups(Tables.documents(s, dir))), 0L, tmp)
-      })
-
-  /** The TextRank co-occurrence table, built once per (application, sf
-    * dir) — the serve-side cache for `textrank_keywords`: the registered
-    * query used to re-run the corpus scan + 15 weighted-PageRank rounds
-    * per serve; with the artifact the corpus is scanned once and every
-    * serve is vocabulary-sized (StreamingTextRank maintains the same
-    * table incrementally in production). The query keeps its
-    * inline-derived oracle SQL, so a hash-green round certifies
-    * from-artifact ≡ inline.
-    */
-  private[graft] def textRankCoocOf(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val d = artifactDirOf("trcooc", s, dir) { tmp =>
-      TextOps.textRankCooc(Tables.documents(s, dir))
-        .write.mode("overwrite").parquet(s"$tmp/cooc")
-    }
-    s.read.schema("tok_a string, tok_b string, cooc bigint").parquet(s"$d/cooc")
-  }
-
-  /** Drop the memoized artifacts for (this application, `dir`) so the
-    * next query rebuilds against current data — the explicit invalidation
-    * hook for callers that regenerate fixtures inside one application.
-    */
-  private[graft] def invalidateDedupIndex(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    artifactDirs.synchronized {
-      val suffix = s"|${s.sparkContext.applicationId}|$dir"
-      artifactDirs.keys.filter(_.endsWith(suffix)).foreach(artifactDirs.remove)
-      pqCbsMemo.keys.filter(_.endsWith(suffix)).foreach(pqCbsMemo.remove)
-      kmCentsMemo.keys.filter(_.endsWith(suffix)).foreach(kmCentsMemo.remove): Unit
-    }
-
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "windowed_count" ->
       """SELECT user_id, event_type,
          time_bucket(INTERVAL '1 minute', ts) AS window_start,

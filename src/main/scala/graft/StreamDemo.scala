@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.{ActivityGenerator, ActivityStream}
 
 /** Runnable end-to-end streaming demo: synthetic generator (S5) → JSON parse
@@ -15,13 +13,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val runSecs = if (args.nonEmpty) args(0).toInt else 20
     val eps = if (args.length > 1) args(1).toDouble else 200.0
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("4")
 
     val cfg = ActivityStream.Config(
       watermark = "2 seconds", windowDuration = "10 seconds",

@@ -350,7 +350,7 @@ object VectorOps {
     * vs round-2's ×C broadcast-join fan-out + hash exchange + row_number
     * (VERDICT r2 #4).
     *
-    * Measured floor note (tools/AbIvf, sf0.1): the residual ~1-2 s the IVF
+    * Measured floor note (sf0.1): the residual ~1-2 s the IVF
     * queries show at toy scale is NOT per-row work — assignment over the
     * whole corpus executes in ~0.2 s and a reused-DataFrame execution of
     * the full scored join runs ~1.0 s of pure AQE stage-materialization +

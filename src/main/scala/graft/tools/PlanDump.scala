@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * before/after plan evidence for optimization rounds, captured without
   * timed execution (building a query may still populate memoized
@@ -19,13 +17,7 @@ object PlanDump {
     val only = args.drop(3).toSet
     java.nio.file.Files.createDirectories(outDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
     // SPARK_GRAFT_NOCKPT=true makes eagerCkpt a pass-through so iterative
     // queries dump their full declarative tree instead of a post-checkpoint
     // RDD scan (diagnostic only — never set for real execution)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-duration profiler for registered queries (dev tool): runs each
   * named query twice (rep 2 = warm) and prints per-stage wall time + task
   * count, so single-task serialization points (the tiny-local-file scan
@@ -13,13 +11,7 @@ object StageProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
 
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

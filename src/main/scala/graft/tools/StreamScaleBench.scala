@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -25,11 +25,7 @@ object StreamScaleBench {
     val dir = args.headOption.getOrElse("/tmp/scale/x10")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(10)
     val outPath = args.lift(2).getOrElse("/tmp/scale/stream_bench.json")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("32")
 
     val docs = Tables.documents(spark, dir).persist()
     val emb = Tables.embeddings(spark, dir).persist()

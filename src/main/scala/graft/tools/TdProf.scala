@@ -7,7 +7,7 @@ import graft.ops.{Multimodal, VectorOps}
 import graft.streaming._
 
 /** Phase profiler for the `takedown_batch_report` fan-out (a labeled
-  * diagnostic harness like AbIvf/StageProbe, not a product path): times
+  * diagnostic harness like StageProbe, not a product path): times
   * each of the eight artifact builds, each maintainer's forget, and the
   * two absence audits separately, so a cost regression in the composed
   * query can be attributed to one phase without bisecting. Round-12

@@ -341,5 +341,12 @@ class PlanAuditSpec extends AnyFunSpec with Matchers with SparkSessionTestWrappe
       }
       offenders shouldBe empty
     }
+
+    it("is the count README states") {
+      val readme = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("README.md")), "UTF-8")
+      """(\d+) queries registered in `SparkEntry.queries`""".r
+        .findFirstMatchIn(readme).map(_.group(1).toInt) shouldBe Some(SparkEntry.queries.size)
+    }
   }
 }
