@@ -1130,8 +1130,9 @@ object SparkEntry {
     // Character/bigram Shannon entropy — the gibberish detector (binary
     // junk, looping filler). Zero-shuffle narrow projection per doc.
     "text_entropy" -> ((s, dir) => TextOps.charEntropy(Tables.documents(s, dir))),
-    // BM25 lexical retrieval: inverted-index posting join, broadcast
-    // df/query/stats sides, per-query ranking window.
+    // BM25 lexical retrieval: query-term postings and doc lengths meet
+    // in one shuffle keyed by query; per-query statistics and ranking
+    // windows reuse it.
     "bm25_topk" -> ((s, dir) => TextOps.bm25TopK(Tables.documents(s, dir))),
     // BM25 served from the inverted-index tables (full postings + doc
     // lengths, the frames StreamingTextIngest maintains): df/corpus stats

@@ -1205,19 +1205,23 @@ object TextOps {
     * different arithmetic tree. Column contract: tf, df, dl, n_docs,
     * sum_dl in scope.
     */
-  def bm25TermSql: String =
-    s"round(ln((n_docs - df + 0.5) / (df + 0.5) + 1) * (tf * ${Bm25K1 + 1}) / " +
-      s"(tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl / (CAST(sum_dl AS DOUBLE) / n_docs))), 6)"
+  def bm25TermSql: String = bm25TermSqlOf("tf", "df")
+
+  /** `bm25TermSql` over the named tf and df columns. */
+  private def bm25TermSqlOf(tf: String, df: String): String =
+    s"round(ln((n_docs - $df + 0.5) / ($df + 0.5) + 1) * ($tf * ${Bm25K1 + 1}) / " +
+      s"($tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl / (CAST(sum_dl AS DOUBLE) / n_docs))), 6)"
 
   /** BM25 top-k lexical retrieval over the corpus for the fixed query
     * set — the inverted-index posting join expressed relationally: the
-    * token table filtered to query terms (tf), term document frequencies
-    * and the (n_docs, sum_dl) corpus stats (|terms| rows, broadcast), and
-    * document lengths. Scale shape: the posting table shuffles once on
-    * (query, doc); the stats side and the query terms are broadcast; the
-    * final per-query ranking window partitions by query. avgdl derives
-    * from INTEGER sums (sum_dl/n_docs), never a double avg() crossing the
-    * engine boundary.
+    * token table filtered to query terms (tf), term document frequencies,
+    * the (n_docs, sum_dl) corpus stats, and document lengths. avgdl
+    * derives from INTEGER sums (sum_dl/n_docs), never a double avg()
+    * crossing the engine boundary.
+    *
+    * Scale: the query-term tokens aggregate to postings (one shuffle on
+    * (doc_id, tok), combined map-side), then `lexicalTopK`'s one shuffle
+    * keyed by q_id.
     */
   def bm25TopK(
       docs: DataFrame,
@@ -1239,6 +1243,10 @@ object TextOps {
     * tok, so each query term reads its own buckets); document-frequency
     * and corpus stats derive from the index itself, so serving equals the
     * inline build exactly — proven in StreamingTextIngestSpec.
+    *
+    * Scale: two jobs and one shuffle keyed by q_id (`lexicalTopK`); the
+    * shuffle carries the query terms' postings and |docs|·|queries|
+    * doc-length rows, the doc lengths fanned out to every query.
     */
   def bm25TopKFromIndex(
       postings: DataFrame,
@@ -1256,21 +1264,31 @@ object TextOps {
   private val QlRanker = 1
 
   /** The ONE scoring plan of both lexical rankers over query-term
-    * postings (doc_id, tok, tf) + doc lengths: the postings meet the
-    * query terms and the doc lengths (both broadcast-sized here; the
-    * doc-length join shuffles on doc_id at scale), and the candidates —
-    * the (query, doc) pairs with at least one query term — gather the tf
-    * of every query-term slot (null when the doc lacks the term). The
-    * slots fan back out to one row per query term, which meets the
-    * broadcast per-term and corpus statistics and scores with BM25's
-    * term expression (shared verbatim with the oracle SQL; null, so
-    * summed as nothing, for an absent term) or Dirichlet QL's (absent
-    * terms add their smoothing mass). The score sum reuses the
-    * candidates' partitioning; per-query top-k window.
+    * postings (doc_id, tok, tf) + doc lengths (doc_id, dl), run as one
+    * exchange keyed by q_id. Each posting fans out to the (q_id, slot)s
+    * of its term (a repeated query term fills each of its slots), each
+    * doc length to every q_id, and the union is repartitioned by q_id.
+    * hash(q_id) satisfies every later clustering, so nothing shuffles
+    * again:
+    *  - the (q_id, doc_id) gather of dl and every slot's tf (null when
+    *    the doc lacks the term);
+    *  - per-q_id windows for n_docs and sum_dl (integer sums, so avgdl
+    *    derives exactly) and each slot's df and cf;
+    *  - the score of each candidate (a doc with a length and at least one
+    *    slot's tf), summed over the slots in order: BM25's term expression
+    *    (shared verbatim with the oracle SQL; an absent term adds nothing)
+    *    or Dirichlet QL's (an absent term adds its smoothing mass); a term
+    *    with df = 0 adds nothing to either;
+    *  - the per-q_id row_number top-k.
     *
-    * `ranker` and `k` reach the plan only as data of the query-term rows,
-    * never as literals in it, so BM25 and QL run the same plan and reuse
-    * each other's generated code.
+    * `ranker` and `k` reach the plan only as data of the fanned-out
+    * posting rows, never as literals in it, so BM25 and QL run the same
+    * plan and reuse each other's generated code.
+    *
+    * Scale: one shuffle, which |docs|·|queries| doc-length rows cross
+    * beside the query terms' postings, and every row of one query lands
+    * in one partition: sized for a few queries per serve, not for a
+    * batch of thousands.
     */
   private def lexicalTopK(
       tf: DataFrame,
@@ -1279,59 +1297,42 @@ object TextOps {
       k: Int,
       ranker: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = tf.sparkSession
-    import spark.implicits._
     val byQuery = queries.groupBy(_._1).map { case (q, qs) => q -> qs.flatMap(_._2) }
-    val termsOfQuery = typedLit(byQuery)
-    val maxTerms = byQuery.values.map(_.size).max
-    // one row per query-term occurrence, numbered by its slot in the query
-    val qterms = byQuery.toSeq.flatMap { case (q, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (q, t, i, ranker, k) }
-    }.toDF("q_id", "tok", "slot", "ranker", "k")
-    val cand = tf
-      .join(broadcast(qterms), Seq("tok"))
-      .join(dl, Seq("doc_id"))
-      .groupBy(col("q_id"), col("doc_id"), col("k"))
-      .agg(max(col("ranker")).as("ranker"), max(col("dl")).as("dl"),
-        array((0 until maxTerms).map(i => max(when(col("slot") === i, col("tf")))): _*).as("slot_tf"))
-    val qlTerm = log(
-      (coalesce(col("tf"), lit(0L)).cast("double") +
-        lit(QlMu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
+    val slots = 0 until byQuery.values.map(_.size).max
+    // term → its (q_id, slot, ranker, k) slots: a constant of the plan
+    val slotsOfTerm = typedLit(byQuery.toSeq
+      .flatMap { case (q, ts) => ts.zipWithIndex.map { case (t, i) => t -> (q, i, ranker, k) } }
+      .groupBy(_._1).map { case (t, ss) => t -> ss.map(_._2) })
+    val postings = tf
+      .select(col("doc_id"), col("tf"), explode(element_at(slotsOfTerm, col("tok"))).as("s"))
+      .select(col("s._1").as("q_id"), col("doc_id"), col("s._2").as("slot"), col("tf"),
+        col("s._3").as("ranker"), col("s._4").as("k"))
+    val lengths = dl
+      .select(explode(typedLit(byQuery.keys.toSeq)).as("q_id"), col("doc_id"), col("dl"))
+    val perQuery = Window.partitionBy(col("q_id"))
+    val stats = Seq("n_docs" -> count(col("dl")), "sum_dl" -> sum(col("dl"))) ++
+      slots.flatMap(i => Seq(s"df$i" -> count(col(s"tf$i")), s"cf$i" -> sum(col(s"tf$i"))))
+    val gathered = postings.unionByName(lengths, allowMissingColumns = true)
+      .repartition(col("q_id"))
+      .groupBy(col("q_id"), col("doc_id"))
+      .agg(max(col("dl")).as("dl"), max(col("ranker")).as("ranker") +: max(col("k")).as("k") +:
+        slots.map(i => max(when(col("slot") === i, col("tf"))).as(s"tf$i")): _*)
+      .select(col("*") +: stats.map { case (name, f) => f.over(perQuery).as(name) }: _*)
+    def term(i: Int): Column = {
+      val ql = log((coalesce(col(s"tf$i"), lit(0L)).cast("double") +
+          lit(QlMu) * (col(s"cf$i").cast("double") / col("sum_dl").cast("double"))) /
         (col("dl").cast("double") + lit(QlMu)))
-    val scored = cand
-      .select(col("q_id"), col("doc_id"), col("k"), col("ranker"), col("dl"), col("slot_tf"),
-        posexplode(element_at(termsOfQuery, col("q_id"))).as(Seq("i", "tok")))
-      .select(col("q_id"), col("doc_id"), col("k"), col("ranker"), col("dl"), col("tok"),
-        element_at(col("slot_tf"), col("i") + 1).as("tf"))
-      .join(broadcast(termStats(tf, dl, queries.flatMap(_._2).distinct)), Seq("tok"))
+      coalesce(when(col(s"df$i") > 0,
+        when(col("ranker") === Bm25Ranker, expr(bm25TermSqlOf(s"tf$i", s"df$i"))).otherwise(ql)),
+        lit(0.0))
+    }
+    val scored = gathered
+      .filter(col("dl").isNotNull && coalesce(slots.map(i => col(s"tf$i")): _*).isNotNull)
       .select(col("q_id"), col("doc_id"), col("k"),
-        when(col("ranker") === Bm25Ranker, expr(bm25TermSql)).otherwise(qlTerm).as("s"))
-      .groupBy(col("q_id"), col("doc_id"), col("k"))
-      .agg(round(sum(col("s")), 6).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("doc_id").asc)
+        round(slots.map(term).reduce(_ + _), 6).as("score"))
+    val w = perQuery.orderBy(col("score").desc, col("doc_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= col("k"))
       .select(col("q_id"), col("rank"), col("doc_id"), col("score"))
-  }
-
-  /** Per query term: document frequency (postings count), collection
-    * frequency (Σ tf), and the corpus statistics n_docs and sum_dl (the
-    * same on every row; integer sums, so avgdl derives exactly). ONE
-    * aggregate over the term postings ∪ the doc lengths fanned out to
-    * every query term: a single broadcast table carries all the
-    * statistics both rankers read, with no one-row cross and no second
-    * aggregation whose completion order could renumber the stages after
-    * it. The fan-out is |terms| hash-aggregate updates per doc length,
-    * combined map-side; terms with no postings drop out (df > 0).
-    */
-  private def termStats(tf: DataFrame, dl: DataFrame, terms: Seq[String]): DataFrame = {
-    val none = lit(null).cast("long")
-    tf.select(col("tok"), lit(1L).as("d"), col("tf").as("c"), none.as("n"), none.as("l"))
-      .unionByName(dl.select(explode(typedLit(terms)).as("tok"),
-        none.as("d"), none.as("c"), lit(1L).as("n"), col("dl").as("l")))
-      .groupBy(col("tok"))
-      .agg(sum(col("d")).as("df"), sum(col("c")).as("cf"),
-        sum(col("n")).as("n_docs"), sum(col("l")).as("sum_dl"))
-      .filter(col("df") > 0)
   }
 
   /** Heaps'-law vocabulary-growth fit V = K·N^β across sources: per-source
@@ -1388,9 +1389,9 @@ object TextOps {
     * 2-3-term sum rounds 6dp before ranking (the cross-engine ln-ulp
     * convention).
     *
-    * Scale: the same plan as bm25TopK (`lexicalTopK`) — tf/cf sides
-    * filtered to the query vocabulary (broadcast-sized), per-query
-    * ranking window.
+    * Scale: the same plan as bm25TopK (`lexicalTopK`): the postings of
+    * the query terms and |docs|·|queries| doc-length rows cross one
+    * shuffle keyed by q_id; the statistics, scores and top-k reuse it.
     */
   def qlTopK(
       docs: DataFrame,

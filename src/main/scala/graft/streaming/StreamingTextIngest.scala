@@ -28,6 +28,10 @@ import graft.streaming.StreamingWrites.GuardedWrites
   * production buckets it by `tok` so each query term reads its own
   * buckets (the same bucket-pruning contract DedupSpec proves for the
   * band index); df/stats are derivable aggregates, never driver state.
+  * A BM25 or QL serve is one shuffle keyed by q_id: the query terms'
+  * postings and every doc length once per query (|docs|·|queries| rows)
+  * cross it, so the doclens table, not the postings, sets a serve's cost
+  * as the index grows.
   */
 object StreamingTextIngest {
 

@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.TextOps
@@ -12,7 +15,8 @@ import graft.streaming.StreamingTextIngest
   * everything ingested, crash-retries are exactly-once, and cold start
   * needs no seed.
   */
-class StreamingTextIngestSpec extends AnyFunSpec with Matchers with SparkSessionTestWrapper {
+class StreamingTextIngestSpec extends AnyFunSpec with Matchers with SparkSessionTestWrapper
+    with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -183,6 +187,48 @@ class StreamingTextIngestSpec extends AnyFunSpec with Matchers with SparkSession
       StreamingTextIngest.readPostings(spark, dir),
       StreamingTextIngest.readDoclens(spark, dir), queries)) shouldBe once
     StreamingTextIngest.readDoclens(spark, dir).count() shouldBe 4L // not 6
+  }
+
+  /** `f`'s result and the Spark jobs it started on this thread (a job
+    * group tags them).
+    */
+  private def withJobs[T](f: => T): (T, Int) = {
+    val group = s"jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    val result = try f
+    finally {
+      sc.clearJobGroup()
+      // the listener bus delivers events asynchronously (private[spark] API)
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.removeSparkListener(listener)
+    }
+    (result, jobs.get)
+  }
+
+  it("a from-index BM25 or QL serve is one shuffle, no broadcast, and at most two jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sti-plan").toString
+    StreamingTextIngest.processBatch(docsDf(b0 ++ b1), 0L, dir)
+    StreamingTextIngest.processBatch(docsDf(b2), 1L, dir)
+    val p = StreamingTextIngest.readPostings(spark, dir)
+    val d = StreamingTextIngest.readDoclens(spark, dir)
+    Seq(TextOps.bm25TopKFromIndex(p, d, queries), TextOps.qlTopKFromIndex(p, d, queries))
+      .foreach { serve =>
+        val (rows, jobs) = withJobs(serve.collect())
+        jobs should be <= 2
+        rows.length shouldBe 7
+        val plan = serve.queryExecution.executedPlan
+        collect(plan) { case e: ShuffleExchangeExec => e }.size shouldBe 1
+        collect(plan) { case e: BroadcastExchangeExec => e } shouldBe empty
+      }
   }
 
   it("cold start serves empty without a seeded index") {

@@ -12,6 +12,28 @@ class TextOpsSpec extends AnyFunSpec with Matchers with SparkSessionTestWrapper 
     rows.toDF("doc_id", "text")
   }
 
+  /** Five docs for the multi-query lexical cases: N = 5, sum_dl = 10
+    * (avgdl 2); cat: df 3, cf 5; dog: df 3, cf 3; fish: absent. d1 and d5
+    * are the same text, so they tie on every query.
+    */
+  private val tieDocs = Seq(1L -> "cat dog", 2L -> "cat cat cat", 3L -> "bird",
+    4L -> "dog bird", 5L -> "cat dog")
+  // q1 one term, q2 a term absent from the corpus, q3 a repeated term
+  private val multiQueries = Seq(1 -> Seq("cat"), 2 -> Seq("dog", "fish"), 3 -> Seq("cat", "cat"))
+
+  private def r6(x: Double) =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** (q_id, rank, doc_id) exactly and each score to the 6dp rounding. */
+  private def checkRanked(got: org.apache.spark.sql.DataFrame,
+      want: List[(Int, Int, Long, Double)]): Unit = {
+    val rows = got.collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toList
+      .sortBy(r => (r._1, r._2))
+    rows.map(r => (r._1, r._2, r._3)) shouldBe want.map(r => (r._1, r._2, r._3))
+    rows.zip(want).foreach { case (g, w) => g._4 shouldBe (w._4 +- 1e-6) }
+  }
+
   describe("tokenStats") {
     it("counts tokens, distincts, and type-token ratio") {
       val r = TextOps.tokenStats(docsDf(Seq(1L -> "a b b c"))).collect()(0)
@@ -73,6 +95,20 @@ class TextOpsSpec extends AnyFunSpec with Matchers with SparkSessionTestWrapper 
       got(1)._3 shouldBe (math.log(1.6) +- 5e-7) // rounded to 6dp
       got(0)._3 should be > got(1)._3
     }
+
+    it("keeps per-query statistics apart, drops absent terms, counts repeated terms, and cuts ties by doc_id") {
+      // cat and dog both have df 3: idf = ln((5-3+0.5)/(3+0.5)+1)
+      val idf = math.log(2.5 / 3.5 + 1)
+      val term = (tf: Int, dl: Int) =>
+        r6(idf * (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / 2.0)))
+      // k = 2 cuts q1 between the tied d1 and d5, and q2 (d1, d4, d5 all
+      // tf 1, dl 2) after d4; fish (df 0) adds nothing to q2; q3 scores
+      // cat twice
+      checkRanked(TextOps.bm25TopK(docsDf(tieDocs), multiQueries, k = 2), List(
+        (1, 1, 2L, term(3, 3)), (1, 2, 1L, term(1, 2)),
+        (2, 1, 1L, term(1, 2)), (2, 2, 4L, term(1, 2)),
+        (3, 1, 2L, r6(2 * term(3, 3))), (3, 2, 1L, r6(2 * term(1, 2)))))
+    }
   }
 
   describe("heapsLawFit") {
@@ -106,12 +142,21 @@ class TextOpsSpec extends AnyFunSpec with Matchers with SparkSessionTestWrapper 
       val docs2 = docsDf(Seq(1L -> "cat dog", 2L -> "cat cat cat", 3L -> "bird"))
       val term = (tf: Int, cf: Int, dl: Int) =>
         math.log((tf + 2000.0 * (cf / 6.0)) / (dl + 2000.0))
-      val r6 = (x: Double) =>
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       val got2 = TextOps.qlTopK(docs2, queries = Seq(1 -> Seq("cat", "dog")), k = 10)
         .collect().map(r => (r.getLong(2), r.getDouble(3))).toMap
       got2(1L) shouldBe r6(term(1, 4, 2) + term(1, 1, 2))
       got2(2L) shouldBe r6(term(3, 4, 3) + term(0, 1, 3))
+    }
+
+    it("keeps per-query statistics apart, drops absent terms, counts repeated terms, and cuts ties by doc_id") {
+      val term = (tf: Int, cf: Int, dl: Int) =>
+        math.log((tf + 2000.0 * (cf / 10.0)) / (dl + 2000.0))
+      // fish has no collection mass: it adds nothing (its smoothing term
+      // would be ln 0); k = 2 cuts q1's d1/d5 tie and q2's three-way tie
+      checkRanked(TextOps.qlTopK(docsDf(tieDocs), multiQueries, k = 2), List(
+        (1, 1, 2L, r6(term(3, 5, 3))), (1, 2, 1L, r6(term(1, 5, 2))),
+        (2, 1, 1L, r6(term(1, 3, 2))), (2, 2, 4L, r6(term(1, 3, 2))),
+        (3, 1, 2L, r6(2 * term(3, 5, 3))), (3, 2, 1L, r6(2 * term(1, 5, 2)))))
     }
   }
 
